@@ -17,7 +17,7 @@ import time
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
     os.environ["SPARK_GRAFT_CPUS"] = cpus
 
     from pyspark.sql import functions as F
@@ -279,12 +279,9 @@ def main() -> None:
     }
     if errors:
         out["errors"] = errors
-    print(json.dumps(out))
-    # Persist the FULL per-query detail in-repo (r11 verdict ask #1):
-    # the driver tail keeps only the compact line below, so without
-    # this artifact round-over-round per-query regressions are
-    # invisible. Round number = one past the newest driver-recorded
-    # BENCH_r{N}.json; repeated runs in a round just overwrite.
+    # Persist the FULL detail (rows, per-query seconds) in-repo; stdout
+    # carries only the final line below. Round number = one past the
+    # newest BENCH_r{N}.json; repeated runs in a round just overwrite.
     try:
         import glob
         import re
@@ -302,36 +299,11 @@ def main() -> None:
             f.write("\n")
     except OSError as exc:
         print(f"bench detail write failed (continuing): {exc!r}", file=sys.stderr)
-    # r14 (verdict ask #4): the compact tail line below keeps only the
-    # single slowest query, which starved the driver's PERF diff
-    # (n_common: 0, empty scaling block in PERF_r13). Emit a MID-SIZE
-    # line first — headline fields plus the FULL per-query seconds
-    # (3 dp, sorted slowest-first, no whitespace ≈ 4–5 KB) and nothing
-    # else (no rows/recall/cache dicts) — so a tail window that spans
-    # it yields a complete per-query diff and a populated scaling
-    # block even when the full line above scrolled out. Additions
-    # only: the timing path and both existing lines are unchanged.
-    midsize = {
-        "metric": out["metric"],
-        "value": out["value"],
-        "unit": out["unit"],
-        "sf": out["sf"],
-        "cpus": out["cpus"],
-        "n_queries": out["n_queries"],
-        "queries": dict(
-            sorted(timings.items(), key=lambda kv: kv[1], reverse=True)
-        ),
-    }
-    if errors:
-        midsize["errors"] = errors
-    print(json.dumps(midsize, separators=(",", ":")))
-    # The driver captures only the TAIL of stdout; the full line above
-    # (with 105 per-query timing/row entries) overflows that window, so
-    # its artifact recorded "parsed": null for three rounds running
-    # (BENCH_r04-r06). Emit a compact summary LAST — same headline
-    # contract, per-query dicts dropped — so the tail always ends with
-    # a complete, parseable JSON line.
-    compact = {
+    # The ONE stdout JSON line, printed last (harnesses parse the final
+    # stdout line): the headline fields plus every per-query second
+    # (3 dp, slowest first, no whitespace). Rows and detail stay in the
+    # BENCH_DETAIL file.
+    final = {
         k: out[k]
         for k in (
             "metric",
@@ -345,11 +317,12 @@ def main() -> None:
             "warm_caches",
         )
     }
-    # keep `queries` type-consistent (name -> seconds): just the slowest
-    compact["queries"] = dict([max(timings.items(), key=lambda kv: kv[1])]) if timings else {}
+    final["queries"] = dict(
+        sorted(timings.items(), key=lambda kv: kv[1], reverse=True)
+    )
     if errors:
-        compact["errors"] = errors
-    print(json.dumps(compact))
+        final["errors"] = errors
+    print(json.dumps(final, separators=(",", ":")))
     spark.stop()
 
 

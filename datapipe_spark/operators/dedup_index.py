@@ -22,6 +22,10 @@ Layout under ``index_dir``::
     bands/  (doc_id, band_id, band_key)   flat band join surface (every
                                           probe touches all bands)
 
+Appends, compactions and purges commit through ``operators.journal``
+(its module docstring states the protocol); ``meta.json`` carries the
+exactly-once ``last_batch_id`` watermark.
+
 ``hash="md5"`` stores portable string shingles/band keys (oracle-
 checkable); ``hash="xxhash64"`` stores int64 verification sets and
 8-byte band keys — 10-20× smaller index rows for the 100 TB path.
@@ -41,6 +45,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from datapipe_spark.operators import journal
 from datapipe_spark.operators.lease import guards_writer
 from datapipe_spark.operators.dedup import (
     JACCARD_THRESHOLD,
@@ -63,16 +68,15 @@ def _p(index_dir: str, part: str) -> str:
 
 
 def _write_parts(
-    mem: DataFrame, sigs: DataFrame, index_dir: str, mode: str
-) -> None:
-    # the three part writes are independent actions over persisted/
-    # checkpointed inputs (both callers cache mem and sigs first) —
-    # submit them concurrently so the driver's per-action planning and
-    # commit overhead overlaps instead of serializing (guide §2.6; r14:
-    # the append path's per-batch wall was dominated by sequential
-    # sub-second jobs). Concurrent first-touch of a cached partition is
-    # safe: the block manager computes it once and blocks other readers.
-    from concurrent.futures import ThreadPoolExecutor
+    mem: DataFrame, sigs: DataFrame, index_dir: str, mode: str, *extra
+) -> list:
+    """Write the three index parts, concurrently with any ``extra``
+    zero-arg jobs; returns the extra jobs' results. The part writes are
+    independent actions over persisted/checkpointed inputs (every
+    caller caches mem and sigs first), so the driver's per-action
+    planning and commit overhead overlaps instead of serializing.
+    Concurrent first-touch of a cached partition is safe: the block
+    manager computes it once and blocks other readers."""
 
     def _mem() -> None:
         mem.select("doc_id", "ghash", "rep_id").write.mode(mode).parquet(
@@ -95,36 +99,32 @@ def _write_parts(
             _p(index_dir, "bands")
         )
 
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        futs = [pool.submit(fn) for fn in (_mem, _sigs, _bands)]
-        for f in futs:
-            f.result()
+    return journal.run_parallel(_mem, _sigs, _bands, *extra)[3:]
 
 
-_JOURNAL = "commit-pending.json"
+_JOURNAL = journal.JOURNAL
 
 
 def _prepare_commit(
     index_dir: str,
     mem: DataFrame,
     sigs: DataFrame,
-    new_meta: dict,
+    meta: dict,
     commit_barrier=None,
 ) -> str:
-    """First half of the atomic append commit (the r7 advisory's torn-
-    append fix): write the batch's mem/sigs/bands delta files into a
-    hidden ``.staging-*`` dir — readers address the part dirs directly,
-    so staged data is invisible — then durably record the commit as a
-    journal (atomic rename): the exact file moves plus the meta the
-    commit must leave behind. Once the journal exists the commit WILL
-    happen: ``_roll_forward`` (called by every append/probe entry)
-    finishes it idempotently after any crash. Returns the journal path."""
-    import json
+    """Stage and journal one append (the ``operators.journal``
+    protocol, steps 1-2): the batch's mem/sigs/bands delta files are
+    written into a ``.staging-*`` dir while the batch's doc and rep
+    counts run in the same fork-join; the journal then names the file
+    moves plus ``meta`` with those counts added. Returns the journal
+    path."""
     import uuid
 
     token = uuid.uuid4().hex[:12]
     stage = _p(index_dir, f".staging-{token}")
-    _write_parts(mem, sigs, stage, "overwrite")
+    n_docs, n_reps = _write_parts(
+        mem, sigs, stage, "overwrite", mem.count, sigs.count
+    )
     moves = []
     for part in ("mem", "sigs", "bands"):
         sdir = _p(stage, part)
@@ -135,12 +135,11 @@ def _prepare_commit(
                 moves.append(
                     [os.path.join(sdir, name), _p(index_dir, f"{part}/{token}-{name}")]
                 )
-    # r14 (guide §2.6): ``new_meta`` may be a zero-arg callable resolved
-    # only here — AFTER the staged writes — so the caller can overlap
-    # its meta-count jobs with the staging writes on a thread pool
-    # instead of serializing two more driver actions in front of them.
-    if callable(new_meta):
-        new_meta = new_meta()
+    new_meta = {
+        **meta,
+        "n_docs": meta["n_docs"] + n_docs,
+        "n_reps": meta["n_reps"] + n_reps,
+    }
     # ``commit_barrier``: zero-arg callable invoked after the staged
     # delta writes and immediately before the commit journal. The
     # probe-then-append caller passes the probe sink-write future's
@@ -157,107 +156,8 @@ def _prepare_commit(
     )
 
 
-def _commit_journal(index_dir: str, journal: dict) -> str:
-    """THE commit point, spelled once for every writer (r12 review —
-    five hand-repeated copies drifted once already, dropping a meta
-    key): journal JSON written aside + one fsynced atomic rename
-    (power-loss durable — r12 review). Past the rename the commit is
-    durable and WILL be completed by ``_roll_forward``. Returns the
-    journal path."""
-    from datapipe_spark.util import atomic_write_json
-
-    jp = _p(index_dir, _JOURNAL)
-    atomic_write_json(jp, journal)
-    return jp
-
-
-def _roll_forward(index_dir: str, sweep: bool = False) -> bool:
-    """Second half / crash recovery: if a commit journal exists, finish
-    its commit — move every staged file still in the staging dir (a
-    move whose source is gone already happened and its destination
-    must exist — source AND destination both missing means the staged
-    batch was destroyed after the commit point, which can never be
-    completed or replayed, so raise instead of silently advancing the
-    watermark past it), replay any journaled whole-dir swaps the same
-    way, rewrite ``meta.json`` from the journal snapshot, then retire
-    the journal. Every step is idempotent, so a crash anywhere inside
-    roll-forward just rolls forward again on the next entry.
-
-    ``sweep=True`` (WRITER entries only — single writer per index by
-    contract) additionally deletes journal-less ``.staging-*`` dirs:
-    debris from a crash BEFORE the commit point, whose batch never
-    committed (watermark unmoved ⟹ it will be replayed wholesale).
-    Readers (the probe path) must NOT sweep — a probe running beside
-    an in-flight pre-journal append would delete the live writer's
-    staging and lose the increment (the scd2 r9 advisory, applied to
-    the sibling journal). Replay runs under the store's recovery lock
-    (r12 review): readers roll forward too, and two processes
-    replaying one journal concurrently could interleave a swap's
-    rename pair destructively. Returns True if a pending commit was
-    completed."""
-    jp = _p(index_dir, _JOURNAL)
-    pending = False
-    if os.path.exists(jp):
-        from datapipe_spark.operators.lease import recovery_guard
-
-        with recovery_guard(index_dir):
-            pending = _replay_journal(index_dir)
-    if sweep:
-        for name in os.listdir(index_dir):
-            if name.startswith(".staging-"):
-                shutil.rmtree(os.path.join(index_dir, name), ignore_errors=True)
-    return pending
-
-
-def _replay_journal(index_dir: str) -> bool:
-    """The replay body of ``_roll_forward``, called ONLY under the
-    recovery lock; re-checks journal existence (the winner of the lock
-    race replays, losers find it retired)."""
-    import json
-
-    jp = _p(index_dir, _JOURNAL)
-    pending = os.path.exists(jp)
-    if pending:
-        with open(jp) as f:
-            j = json.load(f)
-        for src, dst in j["moves"]:
-            if os.path.exists(src):
-                os.makedirs(os.path.dirname(dst), exist_ok=True)
-                os.replace(src, dst)
-            elif not os.path.exists(dst):
-                raise RuntimeError(
-                    f"index commit journal at {jp} names a move whose "
-                    f"source and destination are both missing "
-                    f"({src} -> {dst}): the staged batch was destroyed "
-                    "after the commit point and cannot be completed or "
-                    "replayed. Refusing to advance the watermark past "
-                    "a lost batch."
-                )
-        for src, live in j.get("swaps", []):
-            old = live + ".old"
-            if os.path.exists(src):
-                shutil.rmtree(old, ignore_errors=True)
-                if os.path.exists(live):
-                    os.rename(live, old)
-                os.rename(src, live)
-            elif not os.path.exists(live):
-                raise RuntimeError(
-                    f"index commit journal at {jp} names a swap whose "
-                    f"staged source and live target are both missing "
-                    f"({src} -> {live}): the staged rewrite was "
-                    "destroyed after the commit point. Refusing to "
-                    "complete a torn commit."
-                )
-            shutil.rmtree(old, ignore_errors=True)
-        # deletes land after moves/swaps (the scd2 journal posture):
-        # a purge folding the tombstone queue clears its files here —
-        # removing an already-removed file is the replayed state
-        for path in j.get("deletes", []):
-            if os.path.exists(path):
-                os.remove(path)
-        _write_meta(index_dir, j["meta"])
-        os.remove(jp)
-    return pending
+_commit_journal = journal.write
+_roll_forward = journal.roll_forward
 
 
 def _meta_hash_of(sigs: DataFrame) -> str:
@@ -462,35 +362,16 @@ def append_minhash_index(
             "doc_id", F.col("sh").alias("_sh"), "signature"
         ).join(F.broadcast(new_reps), "doc_id")
     sigs = rep_sigs.localCheckpoint(eager=True)
-    # meta deltas are counted on the checkpointed frames — no table
-    # rescan — BEFORE the commit point, so the journaled meta snapshot
-    # is final. Spread over the EXISTING meta (r12 review): rebuilding
-    # the dict from scratch dropped n_tombstones, silently losing the
-    # queued erasure backlog after any append (readers gate the
-    # tombstone anti-join on that counter).
-    # r14 (guide §2.6): the two count jobs and the three staged part
-    # writes are all independent actions over the two checkpoints —
-    # run the counts on a helper pool so they overlap the staging
-    # writes (the journal resolves the meta callable only after every
-    # staged write has finished, keeping the commit-point semantics).
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as cpool:
-        nd_f = cpool.submit(mem.count)
-        nr_f = cpool.submit(sigs.count)
-
-        def _new_meta() -> dict:
-            nm = {
-                **meta,
-                "hash": h,
-                "n_docs": meta["n_docs"] + nd_f.result(),
-                "n_reps": meta["n_reps"] + nr_f.result(),
-            }
-            if batch_id is not None:
-                nm["last_batch_id"] = batch_id
-            return nm
-
-        _prepare_commit(index_dir, mem, sigs, _new_meta, commit_barrier)
+    # the batch's doc/rep counts are taken on the checkpointed frames —
+    # no table rescan — inside the staging fork-join, BEFORE the commit
+    # point, so the journaled meta snapshot is final. Spread over the
+    # EXISTING meta: rebuilding the dict from scratch would drop
+    # n_tombstones and lose the queued erasure backlog (readers gate
+    # the tombstone anti-join on that counter).
+    new_meta = {**meta, "hash": h}
+    if batch_id is not None:
+        new_meta["last_batch_id"] = batch_id
+    _prepare_commit(index_dir, mem, sigs, new_meta, commit_barrier)
     _roll_forward(index_dir, sweep=True)
     return True
 
@@ -572,13 +453,9 @@ def compact_minhash_index(
     skip_bands = folded and target_bytes is None
     token = uuid.uuid4().hex[:12]
     stage = _p(index_dir, f".staging-{token}")
-    # r14 (guide §2.6): the three part rewrites read disjoint live dirs
-    # and share no uncached subtree — run them concurrently so each
-    # rewrite's planning + write overlaps the others instead of
-    # serializing; the journal below still commits only after every
-    # staged rewrite finished.
-    from concurrent.futures import ThreadPoolExecutor
-
+    # the three part rewrites read disjoint live dirs and share no
+    # uncached subtree — run them concurrently; the journal below still
+    # commits only after every staged rewrite finished.
     swaps = []
     jobs = []
     for part in ("mem", "sigs"):
@@ -600,9 +477,7 @@ def compact_minhash_index(
             )
         )
         swaps.append([os.path.join(stage, "bands"), live])
-    with ThreadPoolExecutor(max_workers=len(jobs)) as pool:
-        for f in [pool.submit(j) for j in jobs]:
-            f.result()
+    journal.run_parallel(*jobs)
     with open(_p(index_dir, "meta.json")) as f:
         meta = json.load(f)
     _commit_journal(index_dir, {"moves": [], "swaps": swaps, "meta": meta})
@@ -1049,12 +924,10 @@ def purge_minhash_index(
     n_files = max(
         1, math.ceil(table_bytes(_p(index_dir, "bands")) / TARGET_FILE_BYTES)
     )
-    # r14 (guide §2.6): the three staged rewrites read disjoint live
-    # parts joined against checkpointed small frames (kb/trans) — no
-    # shared uncached subtree — so they run concurrently; the journal
-    # below still commits only after all three finished.
-    from concurrent.futures import ThreadPoolExecutor
-
+    # the three staged rewrites read disjoint live parts joined against
+    # checkpointed small frames (kb/trans) — no shared uncached subtree
+    # — so they run concurrently; the journal below still commits only
+    # after all three finished.
     def _w_mem() -> None:
         mem_out.write.mode("overwrite").parquet(os.path.join(stage, "mem"))
 
@@ -1069,9 +942,7 @@ def purge_minhash_index(
             .parquet(os.path.join(stage, "bands"))
         )
 
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        for f in [pool.submit(fn) for fn in (_w_mem, _w_sigs, _w_bands)]:
-            f.result()
+    journal.run_parallel(_w_mem, _w_sigs, _w_bands)
 
     new_meta = dict(meta)
     new_meta["n_docs"] = int(meta["n_docs"]) - n_found

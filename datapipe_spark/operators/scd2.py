@@ -36,21 +36,12 @@ slice; history files are write-once. Full SCD2 history =
 ``scd2_dimension_store`` drives build + two increments end-to-end
 under that hash oracle.
 
-Exactly-once via a journaled two-phase commit (the ``dedup_index``
-``_prepare_commit``/``_roll_forward`` pattern — r8 advisory: the prior
-sequential closed-rename → current-swap → meta left a crash window in
-which an increment's closed versions were reader-visible while the
-same versions were still open in ``current/``). An upsert stages its
-closed delta files AND its rewritten bucket dirs under an invisible
-``.staging-*`` dir, then durably records ONE journal (atomic rename)
-naming the closed-file moves, the per-bucket dir swaps, and the meta
-(watermark) the commit must leave behind. Once the journal exists the
-commit WILL complete: ``_roll_forward`` — run at every read/write
-entry — finishes it idempotently after any crash, and meta advances
-only inside that same journaled step, so readers never see a torn
-increment: crash before the journal leaves zero visible change (the
-batch replays wholesale against the unchanged store); crash after it
-is completed by the next entry before anything else runs. A replayed
+Exactly-once via the journaled commit in ``operators.journal`` (its
+module docstring states the protocol). An upsert stages its closed
+delta files AND its rewritten bucket dirs, then journals the
+closed-file moves, the per-bucket dir swaps and the meta (watermark)
+the commit must leave behind; ``_roll_forward`` runs at every
+read/write entry, so readers never see a torn increment. A replayed
 ``batch_id`` ≤ the watermark is skipped wholesale. Single writer per
 store by contract (one streaming query owns a dimension).
 
@@ -78,6 +69,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from datapipe_spark.operators import journal
 from datapipe_spark.operators.lease import guards_writer
 from datapipe_spark.util import write_empty_parquet
 
@@ -181,7 +173,7 @@ SCD2_DEFAULT_BUCKETS = 8
 # which `scd2_rebucket` may change after the files are written
 SCD2_CLOSED_KEY_BUCKETS = 1024
 
-_JOURNAL = "commit-pending.json"
+_JOURNAL = journal.JOURNAL
 
 # store layout version, recorded in meta.json at init and REQUIRED at
 # every entry (r9 advisory, low): a pre-versioned store (flat
@@ -218,111 +210,18 @@ def _meta(dim_dir: str) -> dict:
     return meta
 
 
-def _write_journal(dim_dir: str, journal: dict) -> None:
-    """The commit point: once this fsynced atomic rename lands, the
-    commit is durable (power loss included — r12 review) and WILL be
-    completed by ``_roll_forward``."""
-    from datapipe_spark.util import atomic_write_json
-
-    atomic_write_json(_p(dim_dir, _JOURNAL), journal)
+_write_journal = journal.write
 
 
 def _roll_forward(dim_dir: str, sweep: bool = False) -> bool:
-    """Complete a pending commit (idempotently — a crash anywhere in
-    here just rolls forward again on the next entry). Moves (closed
-    delta files) land before bucket swaps, and meta lands last, so a
-    re-entry always finds the remaining work still described by the
-    journal.
-
-    A journaled step whose source is gone is legal ONLY when its
-    destination already landed (the idempotent-replay state); source
-    AND destination both missing means the staged data was destroyed
-    after the commit point — the increment can never be completed OR
-    replayed (the watermark would advance past it), so raise instead
-    of silently dropping it (r9 advisory, medium #2: the old code
-    skipped and advanced, losing the batch).
-
-    ``sweep=True`` (WRITER entries only — single writer per store by
-    contract) additionally deletes journal-less ``.staging-*`` dirs:
-    debris from a crash BEFORE the commit point, whose batch never
-    committed (watermark unmoved ⟹ it replays wholesale). Readers
-    must NOT sweep — a reader running concurrently with an in-flight
-    pre-journal upsert would delete the live writer's staging and
-    manufacture exactly the lost-increment state above (r9 advisory,
-    medium #2). Replay runs under the store's recovery lock (r12
-    review — readers roll forward too; two concurrent replays of one
-    journal could interleave a swap's rename pair destructively).
-    Returns True if a pending commit was completed."""
-    jp = _p(dim_dir, _JOURNAL)
-    pending = False
-    if os.path.exists(jp):
-        from datapipe_spark.operators.lease import recovery_guard
-
-        with recovery_guard(dim_dir):
-            pending = _replay_journal(dim_dir)
-    # layout gate AFTER journal replay, not before: the only journal a
-    # legacy-meta store can carry is `scd2_migrate`'s own commit (legacy
-    # stores predate the journal entirely), and its j["meta"] carries
-    # the current layout — completing it first lets a reader finish a
-    # crashed migration; a journal-less legacy store still raises here
-    # at every entry (r9 advisory, low)
+    """``journal.roll_forward``, then the layout gate. The gate runs
+    AFTER replay: the only journal a legacy-meta store can carry is
+    ``scd2_migrate``'s own commit, whose meta carries the current
+    layout, so a reader can finish a crashed migration; a journal-less
+    legacy store still raises at every entry."""
+    pending = journal.roll_forward(dim_dir, sweep)
     if os.path.exists(_p(dim_dir, "meta.json")):
         _meta(dim_dir)
-    if sweep:
-        for name in os.listdir(dim_dir):
-            if name.startswith(".staging-"):
-                shutil.rmtree(os.path.join(dim_dir, name), ignore_errors=True)
-    return pending
-
-
-def _replay_journal(dim_dir: str) -> bool:
-    """The replay body of ``_roll_forward``, called ONLY under the
-    recovery lock; re-checks journal existence (the winner of the lock
-    race replays, losers find it retired)."""
-    jp = _p(dim_dir, _JOURNAL)
-    pending = os.path.exists(jp)
-    if pending:
-        with open(jp) as f:
-            j = json.load(f)
-        for src, dst in j["moves"]:
-            if os.path.exists(src):
-                os.makedirs(os.path.dirname(dst), exist_ok=True)
-                os.replace(src, dst)
-            elif not os.path.exists(dst):
-                raise RuntimeError(
-                    f"SCD2 commit journal at {jp} names a move whose "
-                    f"source and destination are both missing "
-                    f"({src} -> {dst}): the staged increment was "
-                    "destroyed after the commit point and cannot be "
-                    "completed or replayed. Refusing to advance the "
-                    "watermark past a lost batch."
-                )
-        for src, live in j["swaps"]:
-            old = live + ".old"
-            if os.path.exists(src):
-                os.makedirs(os.path.dirname(live), exist_ok=True)
-                shutil.rmtree(old, ignore_errors=True)
-                if os.path.exists(live):
-                    os.rename(live, old)
-                os.rename(src, live)
-            elif not os.path.exists(live):
-                raise RuntimeError(
-                    f"SCD2 commit journal at {jp} names a swap whose "
-                    f"staged source and live target are both missing "
-                    f"({src} -> {live}): the staged rewrite was "
-                    "destroyed after the commit point. Refusing to "
-                    "complete a torn commit."
-                )
-            shutil.rmtree(old, ignore_errors=True)
-        # deletes land AFTER moves: a purge journals (new kept-row files
-        # in via moves, old touched files out via deletes) — once the
-        # moves are down, removing an already-removed file is just the
-        # replayed state, so deletion is idempotent by construction
-        for path in j.get("deletes", []):
-            if os.path.exists(path):
-                os.remove(path)
-        _write_meta(dim_dir, j["meta"])
-        os.remove(jp)
     return pending
 
 
@@ -572,22 +471,12 @@ def scd2_upsert(spark: SparkSession, dim_dir: str, increment: DataFrame, batch_i
             .parquet(os.path.join(stage, "current"))
         )
 
-    # r14 (guide §2.6): the two staged writes are independent actions —
-    # different output dirs, both reading the persisted ``chained``
-    # (concurrent first-touch of a cached partition is computed once
-    # under the block manager's per-partition lock) — so submitting
-    # them together overlaps the second write's planning + job behind
-    # the first instead of serializing ~1/3 of the increment wall. The
-    # journal below is written only after BOTH futures resolve, so the
-    # two-phase commit point is unchanged; a failure in either write
-    # surfaces here, before the journal, exactly as the sequential
-    # form did (staging debris is swept by the next entry's recovery).
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as wpool:
-        futs = [wpool.submit(_stage_closed), wpool.submit(_stage_current)]
-        for f in futs:
-            f.result()
+    # the two staged writes are independent actions — different output
+    # dirs, both reading the persisted ``chained`` (concurrent first-
+    # touch of a cached partition is computed once under the block
+    # manager's per-partition lock) — so they run concurrently; the
+    # journal is written only after both resolve.
+    journal.run_parallel(_stage_closed, _stage_current)
     moves = _staged_moves(
         os.path.join(stage, "closed"), _p(dim_dir, "closed"), token
     )
@@ -1434,16 +1323,10 @@ def scd2_purge_keys(
             list(touched_files),
         )
 
-    # r14 (guide §2.6): the two slice rewrites touch disjoint outputs
-    # and read disjoint store slices against the checkpointed key set —
-    # run them concurrently; the journal still commits only after both.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as ppool:
-        cur_f = ppool.submit(_w_current)
-        closed_f = ppool.submit(_w_closed)
-        cur_f.result()
-        moves, deletes = closed_f.result()
+    # the two slice rewrites touch disjoint outputs and read disjoint
+    # store slices against the checkpointed key set — run them
+    # concurrently; the journal still commits only after both.
+    _, (moves, deletes) = journal.run_parallel(_w_current, _w_closed)
     swaps = _bucket_swaps(
         spark, stage, dim_dir, tb, _store_ddl(_extras(meta))
     )

@@ -18,12 +18,13 @@ reference gets from Airflow running independent tasks concurrently.
 
 from __future__ import annotations
 
+import functools
 import os
-from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from datapipe_spark.operators.journal import run_parallel
 from datapipe_spark.plans import marts
 from datapipe_spark.plans import quality as q
 
@@ -79,18 +80,14 @@ def daily_batch_pipeline(spark: SparkSession, sf_dir: str, out_dir: str) -> dict
     def _run_recon(_item=None) -> tuple:
         return "reconciliation", q.reconciliation(spark, sf_dir).count()
 
-    stages = list(_MART_STAGES.items())
-    with ThreadPoolExecutor(max_workers=len(stages) + 2) as pool:
-        futs = [pool.submit(_run_gate)]
-        futs += [pool.submit(_run_mart, it) for it in stages]
-        futs.append(pool.submit(_run_recon))
-        try:
-            counts.update(dict(f.result() for f in futs))
-        except Exception:
-            import shutil
+    mart_jobs = [functools.partial(_run_mart, it) for it in _MART_STAGES.items()]
+    try:
+        counts.update(dict(run_parallel(_run_gate, *mart_jobs, _run_recon)))
+    except Exception:
+        import shutil
 
-            shutil.rmtree(staging, ignore_errors=True)
-            raise
+        shutil.rmtree(staging, ignore_errors=True)
+        raise
     # publish: everything (gate included) succeeded — same-fs renames.
     # Prior marts are renamed aside first and deleted only after every
     # new rename lands, so a crash mid-publish leaves each mart either

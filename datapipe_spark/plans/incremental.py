@@ -155,12 +155,14 @@ def apply_increment(
     # durability order (state swap after a complete serving write) is
     # unchanged.
     tmp = state_p + "_next"
-    from concurrent.futures import ThreadPoolExecutor
+    from concurrent.futures import wait
 
-    pool = ThreadPoolExecutor(max_workers=1)
+    from datapipe_spark.operators.journal import submit
+
+    state_fut = None
     committed = False
     try:
-        state_fut = pool.submit(
+        state_fut = submit(
             lambda: merged_state.repartition(1).write.mode("overwrite").parquet(tmp)
         )
         enriched = orders_chunk.join(merged_state, "o_custkey")
@@ -223,12 +225,13 @@ def apply_increment(
     finally:
         # runs on EVERY exit — including an AnalysisException while the
         # serving plan is still being built: join the state thread
-        # unconditionally (shutdown is safe with no submitted work, and
-        # must precede the tmp cleanup so a still-running writer cannot
-        # race it) and release the cache (the round-2
-        # plan-cache-leak class). On failure the staging dir is removed
-        # rather than left for a retry to overwrite.
-        pool.shutdown(wait=True)
+        # unconditionally (it must finish before the tmp cleanup so a
+        # still-running writer cannot race it) and release the cache (a
+        # skipped unpersist pins the plan in the session cache). On
+        # failure the staging dir is removed rather than left for a
+        # retry to overwrite.
+        if state_fut is not None:
+            wait([state_fut])
         merged_state.unpersist()
         if not committed:
             import shutil

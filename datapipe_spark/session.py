@@ -71,4 +71,10 @@ def get_spark(
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    # executor Python workers import datapipe_spark for every operator
+    # that ships repo functions (Pandas UDFs, the session machine),
+    # whatever the driver's cwd; idempotent per session
+    from datapipe_spark.util import ensure_workers_can_import
+
+    ensure_workers_can_import(spark)
     return spark

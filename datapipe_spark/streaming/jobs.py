@@ -633,16 +633,16 @@ def streaming_dedup_cross_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
             # durably in the sink, and the index dirs are only mutated
             # by the roll-forward AFTER the sink scan finished, so
             # within-batch self-matches stay impossible.
-            from concurrent.futures import ThreadPoolExecutor
+            from concurrent.futures import wait
 
-            with ThreadPoolExecutor(max_workers=1) as spool:
-                sink_f = spool.submit(
-                    lambda: out_df.withColumnRenamed(
-                        "corpus_doc_id", "matched_doc_id"
-                    )
-                    .write.mode("overwrite")
-                    .parquet(os.path.join(sink, f"b_{bid:05d}"))
-                )
+            from datapipe_spark.operators.journal import submit
+
+            sink_f = submit(
+                lambda: out_df.withColumnRenamed("corpus_doc_id", "matched_doc_id")
+                .write.mode("overwrite")
+                .parquet(os.path.join(sink, f"b_{bid:05d}"))
+            )
+            try:
                 append_minhash_index(
                     spark,
                     index_dir,
@@ -651,6 +651,8 @@ def streaming_dedup_cross_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
                     batch_id=bid,
                     commit_barrier=sink_f.result,
                 )
+            finally:
+                wait([sink_f])  # never leave the sink write running
         finally:
             # unpersist even when the write/append throws (r12 review:
             # a skipped unpersist pins the plans in the session cache

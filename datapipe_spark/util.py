@@ -62,7 +62,7 @@ def ensure_workers_can_import(spark) -> None:
     launching from elsewhere would hit ``ModuleNotFoundError`` deep
     inside a task. One ``addPyFile`` of a fresh package zip per
     session removes the cwd dependency (SparkFiles prepends it to
-    every worker's path). Cost: ~10 ms once per session."""
+    every worker's path). Cost: ~20 ms once per session."""
     if getattr(spark, "_datapipe_pyfiles_shipped", False):
         return
     import tempfile
@@ -74,15 +74,12 @@ def ensure_workers_can_import(spark) -> None:
     zpath = os.path.join(
         tempfile.gettempdir(), f"datapipe_spark_pyfiles_{os.getpid()}.zip"
     )
-    with zipfile.ZipFile(zpath, "w") as zf:
-        for dirpath, _dirs, files in os.walk(pkg_root):
-            for n in files:
-                if n.endswith(".py"):
-                    full = os.path.join(dirpath, n)
-                    rel = os.path.join(
-                        "datapipe_spark", os.path.relpath(full, pkg_root)
-                    )
-                    zf.write(full, rel)
+    # bytecode, not source: zipimport never caches what it compiles, so
+    # from a source zip every fresh worker process would recompile the
+    # package (Spark already requires driver and workers to share one
+    # Python version)
+    with zipfile.PyZipFile(zpath, "w") as zf:
+        zf.writepy(pkg_root)
     spark.sparkContext.addPyFile(zpath)
     spark._datapipe_pyfiles_shipped = True
 

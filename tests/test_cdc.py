@@ -534,17 +534,10 @@ def test_scd2_history_for_keys_equals_filtered_full_read(spark, sf_dir, tmp_path
     } == want
 
 
-def test_scd2_commit_crash_sweep_every_fs_step(spark, tmp_path, monkeypatch):
-    """Exhaustive torn-commit sweep: inject a crash after EVERY
-    store-directory filesystem operation of the journaled commit in
-    turn (journal rename, each closed-file move, each bucket-swap
-    step, meta write, journal retirement, staging sweep). After each
-    crash, entry recovery + batch replay must converge to exactly the
-    never-crashed twin — no duplicate versions, no lost closes, no
-    stuck journal."""
+def _scd2_sweep_case(spark, sf_dir):
+    """SCD2 upsert of an update/update/delete tail onto six creates;
+    the store state is its full history plus the watermark."""
     import datetime as dt
-    import os as _os
-    import shutil as _shutil
 
     from datapipe_spark.operators import scd2
 
@@ -565,12 +558,121 @@ def test_scd2_commit_crash_sweep_every_fs_step(spark, tmp_path, monkeypatch):
         schema,
     )
 
-    # never-crashed twin
-    clean = str(tmp_path / "clean")
-    scd2.scd2_init(spark, clean, n_buckets=4)
-    scd2.scd2_upsert(spark, clean, creates, batch_id=0)
-    scd2.scd2_upsert(spark, clean, tail, batch_id=1)
-    want = {tuple(r) for r in scd2.scd2_read_history(spark, clean).collect()}
+    def setup(d):
+        scd2.scd2_init(spark, d, n_buckets=4)
+        scd2.scd2_upsert(spark, d, creates, batch_id=0)
+
+    def op(d):
+        scd2.scd2_upsert(spark, d, tail, batch_id=1)
+
+    def state(d):
+        history = {tuple(r) for r in scd2.scd2_read_history(spark, d).collect()}
+        return history, scd2._meta(d)["last_batch_id"]
+
+    return setup, op, state
+
+
+def _minhash_sweep_case(spark, sf_dir):
+    """Band-index append of new content plus a verbatim copy; the store
+    state is every index row, a probe's output and the meta counters
+    (n_docs, n_reps, watermark)."""
+    from datapipe_spark.operators import dedup_index as di
+
+    cols = ["doc_id", "text"]
+    corpus = spark.createDataFrame(
+        [
+            (1, "the quick brown fox jumps over the lazy dog today"),
+            (2, "pack my box with five dozen liquor jugs tonight ok"),
+            (3, "how vexingly quick daft zebras jump over the fence"),
+        ],
+        cols,
+    )
+    batch = spark.createDataFrame(
+        [
+            (10, "sphinx of black quartz judge my vow right now please"),
+            (11, "the quick brown fox jumps over the lazy dog today"),
+            (12, "a wizard's job is to vex chumps quickly in fog again"),
+        ],
+        cols,
+    )
+    probe = spark.createDataFrame(
+        [
+            (20, "sphinx of black quartz judge my vow right now please"),
+            (21, "a wizard's job is to vex chumps quickly in fog again"),
+        ],
+        cols,
+    )
+
+    def setup(d):
+        di.build_minhash_index(spark, corpus, d)
+
+    def op(d):
+        di.append_minhash_index(spark, d, batch, batch_id=1)
+
+    def state(d):
+        rows = {
+            part: sorted(map(repr, spark.read.parquet(f"{d}/{part}").collect()))
+            for part in ("mem", "sigs", "bands")
+        }
+        probed = sorted(map(tuple, di.probe_minhash_index(spark, d, probe).collect()))
+        meta = di._meta(spark, d)
+        counters = (meta["n_docs"], meta["n_reps"], meta["last_batch_id"])
+        return rows, probed, counters
+
+    return setup, op, state
+
+
+def _ivf_sweep_case(spark, sf_dir):
+    """IVF-index purge of three vectors; the store state is the
+    ``topk_ivf_index`` output plus the vector count."""
+    from datapipe_spark.operators import similarity as sim
+
+    purge = spark.createDataFrame([(v,) for v in (0, 1, 2)], "vec_id long")
+
+    def setup(d):
+        sim.build_ivf_index(spark, sf_dir, d, nlist=4)
+
+    def op(d):
+        sim.purge_ivf_index(spark, d, purge)
+
+    def state(d):
+        topk = sorted(map(tuple, sim.topk_ivf_index(spark, sf_dir, d).collect()))
+        return topk, spark.read.parquet(f"{d}/cells").count()
+
+    return setup, op, state
+
+
+@pytest.mark.parametrize(
+    "case",
+    [
+        pytest.param(_scd2_sweep_case, id="scd2_upsert"),
+        pytest.param(_minhash_sweep_case, id="append_minhash_index"),
+        pytest.param(_ivf_sweep_case, id="purge_ivf_index"),
+    ],
+)
+def test_journaled_commit_crash_sweep_every_fs_step(
+    spark, sf_dir, tmp_path, monkeypatch, case
+):
+    """Exhaustive torn-commit sweep over every journaled store: inject
+    a crash after EVERY store-directory filesystem operation of the
+    commit in turn (journal rename, each staged move, each swap step,
+    each delete, meta write, journal retirement, staging sweep). After
+    each crash, entry recovery + the retried op must converge to
+    exactly the never-crashed twin — no duplicate or lost rows, right
+    counters, no stuck journal, no staging debris."""
+    import os as _os
+    import shutil as _shutil
+
+    from datapipe_spark.operators import journal
+
+    setup, op, state = case(spark, sf_dir)
+
+    # never-crashed twin; every sweep store starts as a copy of template
+    template, clean = str(tmp_path / "template"), str(tmp_path / "clean")
+    setup(template)
+    _shutil.copytree(template, clean)
+    op(clean)
+    want = state(clean)
 
     budget = {"n": None, "root": None}
     reals = {
@@ -600,25 +702,21 @@ def test_scd2_commit_crash_sweep_every_fs_step(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(_shutil, "rmtree", gate(reals["rmtree"]))
 
     completed_without_crash = False
-    for k in range(0, 40):
+    for k in range(0, 60):
         d = str(tmp_path / f"sweep_{k}")
-        budget["n"], budget["root"] = None, d
-        scd2.scd2_init(spark, d, n_buckets=4)
-        scd2.scd2_upsert(spark, d, creates, batch_id=0)
-        budget["n"] = k
+        _shutil.copytree(template, d)
+        budget["n"], budget["root"] = k, d
         crashed = False
         try:
-            scd2.scd2_upsert(spark, d, tail, batch_id=1)
+            op(d)
         except RuntimeError as e:
             assert "crash-inject" in str(e)
             crashed = True
         budget["n"] = None
         # recovery happens at the next entry; replay must be exact-once
-        scd2.scd2_upsert(spark, d, tail, batch_id=1)
-        got = {tuple(r) for r in scd2.scd2_read_history(spark, d).collect()}
-        assert got == want, f"diverged after crash at fs-op {k}"
-        assert scd2._meta(d)["last_batch_id"] == 1
-        assert not _os.path.exists(scd2._p(d, scd2._JOURNAL))
+        op(d)
+        assert state(d) == want, f"diverged after crash at fs-op {k}"
+        assert not _os.path.exists(_os.path.join(d, journal.JOURNAL))
         assert not [n for n in _os.listdir(d) if n.startswith(".staging-")]
         if not crashed:
             completed_without_crash = True
