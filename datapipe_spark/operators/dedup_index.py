@@ -24,7 +24,8 @@ Layout under ``index_dir``::
 
 Appends, compactions and purges commit through ``operators.journal``
 (its module docstring states the protocol); ``meta.json`` carries the
-exactly-once ``last_batch_id`` watermark.
+exactly-once ``last_batch_id`` watermark. Erasure requests queue in
+``operators.tombstones``.
 
 ``hash="md5"`` stores portable string shingles/band keys (oracle-
 checkable); ``hash="xxhash64"`` stores int64 verification sets and
@@ -40,12 +41,11 @@ reach filter does, and both verify the same exact jaccard.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from datapipe_spark.operators import journal
+from datapipe_spark.operators import journal, tombstones
 from datapipe_spark.operators.lease import guards_writer
 from datapipe_spark.operators.dedup import (
     JACCARD_THRESHOLD,
@@ -118,23 +118,15 @@ def _prepare_commit(
     counts run in the same fork-join; the journal then names the file
     moves plus ``meta`` with those counts added. Returns the journal
     path."""
-    import uuid
-
-    token = uuid.uuid4().hex[:12]
-    stage = _p(index_dir, f".staging-{token}")
+    token, stage = journal.stage(index_dir)
     n_docs, n_reps = _write_parts(
         mem, sigs, stage, "overwrite", mem.count, sigs.count
     )
-    moves = []
-    for part in ("mem", "sigs", "bands"):
-        sdir = _p(stage, part)
-        for name in sorted(os.listdir(sdir)):
-            if name.startswith("part-"):
-                # token prefix keeps names unique in the live dir even
-                # across replays of the same batch
-                moves.append(
-                    [os.path.join(sdir, name), _p(index_dir, f"{part}/{token}-{name}")]
-                )
+    moves = [
+        mv
+        for part in ("mem", "sigs", "bands")
+        for mv in journal.staged_moves(_p(stage, part), _p(index_dir, part), token)
+    ]
     new_meta = {
         **meta,
         "n_docs": meta["n_docs"] + n_docs,
@@ -183,13 +175,7 @@ def build_minhash_index(
     resurrect the old batch-id watermark, silently skipping future
     appends.
     """
-    if os.path.isdir(index_dir):
-        jp = _p(index_dir, _JOURNAL)
-        if os.path.exists(jp):
-            os.remove(jp)
-        for name in os.listdir(index_dir):
-            if name.startswith(".staging-") or name == "tombstones":
-                shutil.rmtree(os.path.join(index_dir, name), ignore_errors=True)
+    tombstones.reset(index_dir)
     mem = _collapse_exact(docs.select("doc_id", "text")).persist()
     reps = _rep_docs(docs, mem)
     sigs = (
@@ -365,9 +351,8 @@ def append_minhash_index(
     # the batch's doc/rep counts are taken on the checkpointed frames —
     # no table rescan — inside the staging fork-join, BEFORE the commit
     # point, so the journaled meta snapshot is final. Spread over the
-    # EXISTING meta: rebuilding the dict from scratch would drop
-    # n_tombstones and lose the queued erasure backlog (readers gate
-    # the tombstone anti-join on that counter).
+    # EXISTING meta: rebuilding the dict from scratch would drop the
+    # n_tombstones erasure backlog counter.
     new_meta = {**meta, "hash": h}
     if batch_id is not None:
         new_meta["last_batch_id"] = batch_id
@@ -417,9 +402,6 @@ def compact_minhash_index(
     ``dedup_cross_corpus_compacted`` registry entry and file counts are
     gated in tests. Returns per-part (files_before, files_after).
     """
-    import json
-    import uuid
-
     from datapipe_spark.operators.maintenance import (
         TARGET_FILE_BYTES,
         cluster_parquet_into,
@@ -437,22 +419,19 @@ def compact_minhash_index(
         part: parquet_file_count(_p(index_dir, part))
         for part in ("mem", "sigs", "bands")
     }
-    # fold the merge-on-read erasure queue first (the scd2_compact
-    # posture): post-compaction probes drop the anti-join entirely.
+    # fold the erasure queue first (the scd2_compact posture).
     # Re-enters this writer's own lease.
     tb = target_bytes or TARGET_FILE_BYTES
-    folded = False
-    if int(_meta(spark, index_dir).get("n_tombstones", 0)) > 0:
+    folded = bool(tombstones.files(index_dir))
+    if folded:
         purge_minhash_index(spark, index_dir, None)
-        folded = True
     # the fold already wrote bands/ range-clustered on band_key at the
     # default file target — re-clustering it here would run the most
     # expensive pass TWICE for nothing (r12 review). mem/sigs still
     # compact below (the purge rewrite sizes them by plan partitions,
     # not by bytes). A custom target_bytes re-clusters to honor it.
     skip_bands = folded and target_bytes is None
-    token = uuid.uuid4().hex[:12]
-    stage = _p(index_dir, f".staging-{token}")
+    stage = journal.stage(index_dir)[1]
     # the three part rewrites read disjoint live dirs and share no
     # uncached subtree — run them concurrently; the journal below still
     # commits only after every staged rewrite finished.
@@ -478,9 +457,9 @@ def compact_minhash_index(
         )
         swaps.append([os.path.join(stage, "bands"), live])
     journal.run_parallel(*jobs)
-    with open(_p(index_dir, "meta.json")) as f:
-        meta = json.load(f)
-    _commit_journal(index_dir, {"moves": [], "swaps": swaps, "meta": meta})
+    _commit_journal(
+        index_dir, {"moves": [], "swaps": swaps, "meta": _meta(spark, index_dir)}
+    )
     _roll_forward(index_dir, sweep=True)
     return {
         part: (before[part], parquet_file_count(_p(index_dir, part)))
@@ -629,7 +608,12 @@ def _probe_plan(
         .transform(lambda d: F.broadcast(d).join(imem, "corpus_rep"))
         .select("new_doc_id", "corpus_doc_id", "jaccard")
     )
-    out = _minus_tombstones(spark, index_dir, meta, out)
+    # queued erasures: doc ids are never reused, so the id alone is the
+    # obligation (output-identical to probing the physically purged
+    # index — a rep-promoted group's survivors are reached through mem/)
+    out = tombstones.fold(
+        spark, index_dir, out, F.col("d.corpus_doc_id") == F.col("t.doc_id")
+    )
     return out, bmem, bsigs
 
 
@@ -674,80 +658,21 @@ def _cached_corpus_index(
     )
 
 
-# broadcast gate for the purge's id set — the scd2 purge posture
-# (operators/scd2.py SCD2_BROADCAST_MAX_ROWS): an erasure backlog past
-# this row count falls back to shuffle joins instead of OOMing the
-# driver with a forced broadcast
-PURGE_BROADCAST_MAX_ROWS = 2_000_000
-
-
-def _has_tombstones(index_dir: str) -> bool:
-    root = _p(index_dir, "tombstones")
-    return os.path.isdir(root) and any(
-        n.endswith(".parquet") for n in os.listdir(root)
-    )
-
-
-def _minus_tombstones(
-    spark: SparkSession, index_dir: str, meta: dict, out: DataFrame
-) -> DataFrame:
-    """Merge-on-read erasure on the probe output (r10 verdict ask #2):
-    pairs whose corpus member is queued for erasure are hidden by a
-    count-gated broadcast anti-join — output-identical to probing a
-    physically purged index (a fully-erased group's pairs all filter
-    out; a rep-promoted group's surviving members were already reached
-    through mem/, which the physical purge preserves). Doc ids are
-    never reused (new arrivals carry fresh ids by the probe contract),
-    so no sequence scoping is needed — the id alone is the
-    obligation."""
-    n = int(meta.get("n_tombstones", 0))
-    if n == 0 or not _has_tombstones(index_dir):
-        return out
-    tomb = spark.read.parquet(_p(index_dir, "tombstones")).select(
-        F.col("doc_id").alias("corpus_doc_id")
-    )
-    t = F.broadcast(tomb) if n <= PURGE_BROADCAST_MAX_ROWS else tomb
-    return out.join(t, "corpus_doc_id", "left_anti")
-
-
 @guards_writer
 def queue_purge_minhash_index(
     spark: SparkSession, index_dir: str, purge_ids: DataFrame
 ) -> int:
     """Merge-on-read erasure queue for the band index (r10 verdict ask
-    #2 — the ``scd2_queue_purge`` posture): append the doc_ids to a
-    ``tombstones/`` set without rewriting mem/sigs/bands. Probes fold
-    the queue at read (``_minus_tombstones``);
-    ``purge_minhash_index`` / ``compact_minhash_index`` fold it
-    physically and clear it — N small requests cost N tiny appends
-    plus one batched rewrite. Journaled like every append. Returns the
-    number of ids queued."""
-    import json
-    import uuid
-
+    #2 — the ``scd2_queue_purge`` posture, format and fold in
+    ``operators.tombstones``): queue the doc_ids without rewriting
+    mem/sigs/bands. ``purge_minhash_index`` / ``compact_minhash_index``
+    fold the queue physically and clear it — N small requests cost N
+    tiny appends plus one batched rewrite. Returns the number of ids
+    queued."""
     _roll_forward(index_dir, sweep=True)
-    meta = _meta(spark, index_dir)
-    kb = purge_ids.select("doc_id").distinct().localCheckpoint(eager=True)
-    n = kb.count()
-    if n == 0:
-        return 0
-    token = uuid.uuid4().hex[:12]
-    stage = _p(index_dir, f".staging-{token}")
-    kb.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(stage, "tombstones")
+    return tombstones.queue(
+        spark, index_dir, purge_ids.select("doc_id"), _meta(spark, index_dir)
     )
-    moves = []
-    sdir = os.path.join(stage, "tombstones")
-    for name in sorted(os.listdir(sdir)):
-        if name.startswith("part-") and name.endswith(".parquet"):
-            moves.append(
-                [os.path.join(sdir, name),
-                 _p(index_dir, f"tombstones/{token}-{name}")]
-            )
-    new_meta = {**meta, "n_tombstones": int(meta.get("n_tombstones", 0)) + n}
-    _commit_journal(index_dir, {"moves": moves, "swaps": [], "meta": new_meta})
-    _roll_forward(index_dir, sweep=True)
-    return n
 
 
 def _purge_rewrite_plans(
@@ -818,7 +743,7 @@ def purge_minhash_index(
 
     Cost shape at 100 TB: ONE map-only pass over each part — the purged
     id set and the O(affected groups) rep-translation map are broadcast
-    (count-gated at ``PURGE_BROADCAST_MAX_ROWS``, shuffle fallback), so
+    (count-gated at ``tombstones.BROADCAST_MAX_ROWS``, shuffle fallback), so
     the index is never shuffled on its own bulk; only the affected-
     group slice (O(purged)) takes a tiny aggregation. The full-scan
     rewrite itself is inherent to erasure in immutable files — the same
@@ -830,42 +755,19 @@ def purge_minhash_index(
 
     Returns ``{"purged_docs", "dropped_reps", "renamed_reps"}``.
     """
-    import json
     import math
-    import uuid
 
     from datapipe_spark.operators.maintenance import TARGET_FILE_BYTES, table_bytes
 
     _roll_forward(index_dir, sweep=True)
     meta = _meta(spark, index_dir)
-    # fold the merge-on-read queue (r10 verdict ask #2): queued
-    # tombstones join the explicit backlog and are cleared in this
-    # same journaled commit (``purge_ids=None`` is the maintenance-
-    # pass form — fold the queue alone)
-    parts = []
-    if purge_ids is not None:
-        parts.append(purge_ids.select("doc_id"))
-    tomb_files = (
-        [
-            _p(index_dir, f"tombstones/{n}")
-            for n in sorted(os.listdir(_p(index_dir, "tombstones")))
-            if n.endswith(".parquet")
-        ]
-        if _has_tombstones(index_dir)
-        else []
-    )
-    if tomb_files and int(meta.get("n_tombstones", 0)) > 0:
-        parts.append(
-            spark.read.parquet(_p(index_dir, "tombstones")).select("doc_id")
-        )
-    if not parts:
+    # the queue folds into this commit (``purge_ids=None`` is the
+    # maintenance-pass form — fold the queue alone)
+    kb, tomb = tombstones.purge_set(spark, index_dir, "doc_id", purge_ids)
+    n_purge = kb.count() if kb is not None else 0
+    if not n_purge:
         return {"purged_docs": 0, "dropped_reps": 0, "renamed_reps": 0}
-    spec = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
-    kb = spec.distinct().localCheckpoint(eager=True)
-    n_purge = kb.count()
-    if n_purge == 0:
-        return {"purged_docs": 0, "dropped_reps": 0, "renamed_reps": 0}
-    gated = n_purge <= PURGE_BROADCAST_MAX_ROWS
+    gated = n_purge <= tombstones.BROADCAST_MAX_ROWS
     probe = F.broadcast(kb) if gated else kb
 
     mem = spark.read.parquet(_p(index_dir, "mem"))
@@ -874,18 +776,9 @@ def purge_minhash_index(
     hits = mem.join(probe, "doc_id").localCheckpoint(eager=True)
     n_found = hits.count()
     if n_found == 0:
-        # backlog held only never-indexed ids: nothing to rewrite —
-        # commit a queue-clear-only journal (the scd2_purge_keys /
-        # purge_ivf_index never-seen-keys posture; r11 advisory, low —
-        # a full mem/sigs/bands rewrite here would be a pointless
-        # O(index) pass for a no-op erasure)
-        if tomb_files:
-            _commit_journal(
-                index_dir,
-                {"moves": [], "swaps": [], "deletes": tomb_files,
-                 "meta": {**meta, "n_tombstones": 0}},
-            )
-            _roll_forward(index_dir, sweep=True)
+        # backlog held only never-indexed ids: a full mem/sigs/bands
+        # rewrite would be a pointless O(index) pass (r11 advisory)
+        tombstones.clear(index_dir, tomb, meta)
         return {"purged_docs": 0, "dropped_reps": 0, "renamed_reps": 0}
     affected = hits.select("ghash", F.col("rep_id").alias("old_rep")).distinct()
     # new rep per affected group = min SURVIVING member (the build's
@@ -913,8 +806,7 @@ def purge_minhash_index(
     ).collect()[0]
     dropped, renamed = int(stat["dropped"]), int(stat["renamed"])
 
-    token = uuid.uuid4().hex[:12]
-    stage = _p(index_dir, f".staging-{token}")
+    stage = journal.stage(index_dir)[1]
     mem_out, sigs_out, bands_out = _purge_rewrite_plans(
         spark, index_dir, probe, trans, gated
     )
@@ -944,18 +836,16 @@ def purge_minhash_index(
 
     journal.run_parallel(_w_mem, _w_sigs, _w_bands)
 
-    new_meta = dict(meta)
+    new_meta = {**meta, "n_tombstones": 0}
     new_meta["n_docs"] = int(meta["n_docs"]) - n_found
     new_meta["n_reps"] = int(meta["n_reps"]) - dropped
-    new_meta["n_tombstones"] = 0  # the queue folds into this commit
     swaps = [
         [os.path.join(stage, part), _p(index_dir, part)]
         for part in ("mem", "sigs", "bands")
     ]
     _commit_journal(
         index_dir,
-        {"moves": [], "swaps": swaps, "deletes": tomb_files,
-         "meta": new_meta},
+        {"moves": [], "swaps": swaps, "deletes": tomb, "meta": new_meta},
     )
     _roll_forward(index_dir, sweep=True)
     return {

@@ -8,10 +8,12 @@ writes in front of it; the stores supply the staged paths and the meta.
 The protocol:
 
 1. **Stage.** A writer entry writes everything the commit will publish
-   under a hidden ``<store>/.staging-<token>/`` dir. Readers address the
-   live part dirs directly, so staged data is invisible. Independent
-   staged writes run concurrently through ``run_parallel``; all of them
-   resolve before step 2.
+   under a hidden ``<store>/.staging-<token>/`` dir (``stage``). Readers
+   address the live part dirs directly, so staged data is invisible.
+   Independent staged writes run concurrently through ``run_parallel``;
+   all of them resolve before step 2. ``staged_moves`` turns a staged
+   part dir into journal moves, ``partition_swaps`` turns staged
+   partition dirs into journal swaps.
 2. **Commit point.** ``write`` publishes ONE journal,
    ``<store>/commit-pending.json``, with an fsynced atomic rename
    (``util.atomic_write_json``, durable across power loss). It names::
@@ -62,17 +64,53 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import uuid
 from concurrent.futures import Future, ThreadPoolExecutor
 from typing import Any, Callable
 
 from datapipe_spark.operators.lease import recovery_guard
-from datapipe_spark.util import atomic_write_json
+from datapipe_spark.util import atomic_write_json, write_empty_parquet
 
 JOURNAL = "commit-pending.json"
+_STAGING = ".staging-"
 
 
 def _path(store_dir: str, name: str) -> str:
     return os.path.join(store_dir.rstrip("/"), name)
+
+
+def stage(store_dir: str) -> tuple[str, str]:
+    """A fresh staging dir for one commit (step 1): returns ``(token,
+    path)``. The token also prefixes the live names of staged files, so
+    they stay unique across replays of the same batch."""
+    token = uuid.uuid4().hex[:12]
+    return token, _path(store_dir, f"{_STAGING}{token}")
+
+
+def staged_moves(sdir: str, dest: str, token: str) -> list[list[str]]:
+    """Journal ``moves`` for every part file staged in ``sdir``, renamed
+    to ``dest/<token>-<name>``."""
+    return [
+        [os.path.join(sdir, name), os.path.join(dest, f"{token}-{name}")]
+        for name in sorted(os.listdir(sdir))
+        if name.startswith("part-") and name.endswith(".parquet")
+    ]
+
+
+def partition_swaps(
+    sdir: str, live: str, partitions: list[str], ddl: str
+) -> list[list[str]]:
+    """Journal ``swaps`` replacing each live ``partitions`` dir (e.g.
+    ``bucket=3``) with its staged twin under ``sdir``. A partition the
+    rewrite emptied produced no staged dir: a typed empty one is written
+    in its place (no Spark job), so the stale rows still get replaced."""
+    swaps = []
+    for name in partitions:
+        src = os.path.join(sdir, name)
+        if not os.path.isdir(src):
+            write_empty_parquet(src, ddl)
+        swaps.append([src, os.path.join(live, name)])
+    return swaps
 
 
 def write(store_dir: str, journal: dict) -> str:
@@ -94,7 +132,7 @@ def roll_forward(store_dir: str, sweep: bool = False) -> bool:
             pending = _replay(base)
     if sweep:
         for name in os.listdir(base):
-            if name.startswith(".staging-"):
+            if name.startswith(_STAGING):
                 shutil.rmtree(os.path.join(base, name), ignore_errors=True)
     return pending
 

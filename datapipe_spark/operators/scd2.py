@@ -28,6 +28,8 @@ Layout under ``dim_dir``::
                          ``scd2_compact_closed``
     commit-pending.json  the commit journal (see below)
 
+plus the merge-on-read erasure queue of ``operators.tombstones``.
+
 The current/closed split is the hive form of partitioning by
 ``is_current``: the hot "current dimension" read touches one compact
 slice; history files are write-once. Full SCD2 history =
@@ -62,14 +64,12 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
-import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from datapipe_spark.operators import journal
+from datapipe_spark.operators import journal, tombstones
 from datapipe_spark.operators.lease import guards_writer
 from datapipe_spark.util import write_empty_parquet
 
@@ -442,8 +442,7 @@ def scd2_upsert(spark: SparkSession, dim_dir: str, increment: DataFrame, batch_i
     # the current-slice write reuses the cached rows — one fewer full
     # pass per increment (r13, guide §1.2/§5)
     chained = chained.persist()
-    token = uuid.uuid4().hex[:12]
-    stage = _p(dim_dir, f".staging-{token}")
+    token, stage = journal.stage(dim_dir)
     n_buckets = int(meta["n_buckets"])
 
     # stage the closed delta (flat files carrying the closing batch as
@@ -477,10 +476,13 @@ def scd2_upsert(spark: SparkSession, dim_dir: str, increment: DataFrame, batch_i
     # manager's per-partition lock) — so they run concurrently; the
     # journal is written only after both resolve.
     journal.run_parallel(_stage_closed, _stage_current)
-    moves = _staged_moves(
+    moves = journal.staged_moves(
         os.path.join(stage, "closed"), _p(dim_dir, "closed"), token
     )
-    swaps = _bucket_swaps(spark, stage, dim_dir, tb, _store_ddl(extras))
+    swaps = journal.partition_swaps(
+        os.path.join(stage, "current"), _p(dim_dir, "current"),
+        [f"bucket={b}" for b in tb], _store_ddl(extras),
+    )
 
     _write_journal(dim_dir, {"moves": moves, "swaps": swaps, "meta": new_meta})
     _roll_forward(dim_dir, sweep=True)
@@ -489,81 +491,34 @@ def scd2_upsert(spark: SparkSession, dim_dir: str, increment: DataFrame, batch_i
     return True
 
 
-def _staged_moves(sdir: str, dest_dir: str, token: str) -> list[list[str]]:
-    """Journal ``moves`` for every staged part file: token-prefixed
-    destination names stay unique in the live dir across replays of
-    the same batch. One spelling for upsert/queue-purge/purge (r12
-    review — a drifted copy would desync the journals)."""
-    return [
-        [os.path.join(sdir, name), os.path.join(dest_dir, f"{token}-{name}")]
-        for name in sorted(os.listdir(sdir))
-        if name.startswith("part-") and name.endswith(".parquet")
-    ]
-
-
-def _bucket_swaps(
-    spark: SparkSession, stage: str, dim_dir: str, tb: list, ddl: str
-) -> list[list[str]]:
-    """Journal ``swaps`` for the touched buckets: a bucket whose every
-    key was tombstoned/purged produced no staged dir — swap in a typed
-    empty one so the stale open rows still get replaced (one spelling
-    for upsert and purge)."""
-    swaps = []
-    for b in tb:
-        src = os.path.join(stage, f"current/bucket={b}")
-        if not os.path.isdir(src):
-            write_empty_parquet(src, ddl)
-        swaps.append([src, _p(dim_dir, f"current/bucket={b}")])
-    return swaps
-
-
-def _has_tombstones(dim_dir: str) -> bool:
-    root = _p(dim_dir, "tombstones")
-    return os.path.isdir(root) and any(
-        n.endswith(".parquet") for n in os.listdir(root)
+def _scoped() -> Column:
+    """The sequence-scoped erasure condition (``operators.tombstones``):
+    a tombstone or purge-set row ``t`` hides the versions ``d`` of its
+    key written at or before its ``asof_inc``. ``d`` must still carry
+    ``_written_inc``."""
+    return (F.col("d.id") == F.col("t.id")) & (
+        F.col("d._written_inc") <= F.col("t." + tombstones.SCOPE)
     )
 
 
-def _minus_tombstones(
-    spark: SparkSession, dim_dir: str, meta: dict, df: DataFrame
-) -> DataFrame:
-    """Merge-on-read erasure (r10 verdict ask #2): anti-join the queued
-    tombstone set — Iceberg's equality-delete-with-sequence-number
-    pattern on our store. A tombstone ``(id, asof_inc)`` hides every
-    version of the key written at or before the queue point
-    (``_written_inc`` ≤ ``asof_inc``); versions a LATER increment
-    writes survive, exactly as they would after a physical purge
-    followed by re-insertion. The tombstone set is count-gated
-    broadcast (the probe posture — plan-gated in tests), so the read
-    pays one map-side anti-join, never a shuffle of the store.
-    ``df`` must still carry ``_written_inc``."""
-    n = int(meta.get("n_tombstones", 0))
-    if n == 0 or not _has_tombstones(dim_dir):
-        return df
-    tomb = spark.read.parquet(_p(dim_dir, "tombstones")).select("id", "asof_inc")
-    t = F.broadcast(tomb) if n <= SCD2_BROADCAST_MAX_ROWS else tomb
-    return df.alias("h").join(
-        t.alias("t"),
-        (F.col("h.id") == F.col("t.id"))
-        & (F.col("h._written_inc") <= F.col("t.asof_inc")),
-        "left_anti",
-    )
+def _erase(df: DataFrame, spec: DataFrame) -> DataFrame:
+    return df.alias("d").join(spec.alias("t"), _scoped(), "left_anti")
 
 
 def scd2_read_history(spark: SparkSession, dim_dir: str) -> DataFrame:
     """The full Type-2 dimension: closed versions ∪ open versions —
     row-identical to the batch ``cdc_scd2_history`` over the same
     changelog (hash-oracled by the registry entry). Queued tombstones
-    are folded in at read (``_minus_tombstones``)."""
+    are folded in at read, as in every reader below."""
     _recover(dim_dir)
     meta = _meta(dim_dir)
     hcols = _history_cols(_extras(meta))
-    cur = _minus_tombstones(
-        spark, dim_dir, meta, _read_current(spark, dim_dir, meta)
+    cur = tombstones.fold(
+        spark, dim_dir, _read_current(spark, dim_dir, meta), _scoped()
     )
     if _has_closed(dim_dir):
-        closed = _minus_tombstones(
-            spark, dim_dir, meta, _read_closed(spark, dim_dir, meta)
+        closed = tombstones.fold(
+            spark, dim_dir, _read_closed(spark, dim_dir, meta), _scoped()
         )
         return closed.select(*hcols).unionByName(cur.select(*hcols))
     return cur.select(*hcols)
@@ -584,13 +539,13 @@ def scd2_lookup(spark: SparkSession, dim_dir: str, ids: list) -> DataFrame:
         r[0]
         for r in keys.select(_bucket_of(n_buckets).alias("b")).distinct().collect()
     )
-    cur = _minus_tombstones(
+    cur = tombstones.fold(
         spark,
         dim_dir,
-        meta,
         _read_current(spark, dim_dir, meta).filter(
             F.col("bucket").isin(tb) if tb else F.lit(False)
         ),
+        _scoped(),
     )
     return cur.join(F.broadcast(keys), "id").select(
         *_history_cols(_extras(meta))
@@ -636,13 +591,13 @@ def scd2_history_for_keys(
     tb = sorted({r["b"] for r in pairs})
     cb = sorted({r["cb"] for r in pairs})
     hcols = _history_cols(_extras(meta))
-    cur = _minus_tombstones(
+    cur = tombstones.fold(
         spark,
         dim_dir,
-        meta,
         _read_current(spark, dim_dir, meta).filter(
             F.col("bucket").isin(tb) if tb else F.lit(False)
         ),
+        _scoped(),
     ).select(*hcols)
     hist = cur
     if _has_closed(dim_dir):
@@ -657,7 +612,7 @@ def scd2_history_for_keys(
             if cb
             else F.lit(False)
         )
-        closed = _minus_tombstones(spark, dim_dir, meta, closed)
+        closed = tombstones.fold(spark, dim_dir, closed, _scoped())
         hist = closed.select(*hcols).unionByName(cur)
     return hist.join(F.broadcast(kb) if gated else kb, "id", "semi")
 
@@ -683,16 +638,16 @@ def scd2_as_of(spark: SparkSession, dim_dir: str, batch_id: int) -> DataFrame:
     meta = _meta(dim_dir)
     hcols = _history_cols(_extras(meta))
     cur = (
-        _minus_tombstones(
-            spark, dim_dir, meta, _read_current(spark, dim_dir, meta)
+        tombstones.fold(
+            spark, dim_dir, _read_current(spark, dim_dir, meta), _scoped()
         )
         .filter(F.col("_written_inc") <= batch_id)
         .select(*hcols)
     )
     if not _has_closed(dim_dir):
         return cur
-    closed = _minus_tombstones(
-        spark, dim_dir, meta, _read_closed(spark, dim_dir, meta)
+    closed = tombstones.fold(
+        spark, dim_dir, _read_closed(spark, dim_dir, meta), _scoped()
     ).filter(F.col("_written_inc") <= batch_id)
     closed_by_now = closed.filter(F.col("inc") <= batch_id).select(*hcols)
     reopened = (
@@ -724,8 +679,7 @@ def scd2_rebucket(spark: SparkSession, dim_dir: str, n_buckets: int) -> None:
     cur = _read_current(spark, dim_dir, meta).select(
         *_store_cols(_extras(meta))
     )
-    token = uuid.uuid4().hex[:12]
-    stage = _p(dim_dir, f".staging-{token}/current")
+    stage = os.path.join(journal.stage(dim_dir)[1], "current")
     (
         cur.withColumn("bucket", _bucket_of(int(n_buckets)))
         .repartition(int(n_buckets), "bucket")
@@ -783,11 +737,9 @@ def scd2_compact_closed(
     )
 
     _recover(dim_dir, sweep=True)
-    # fold the merge-on-read erasure queue first (r10 verdict ask #2 —
-    # Iceberg folds delete files at compaction): the physical purge
-    # clears the tombstones, so post-compaction reads drop the
-    # anti-join entirely. Re-enters this writer's own lease.
-    if int(_meta(dim_dir).get("n_tombstones", 0)) > 0:
+    # fold the erasure queue first, as Iceberg folds delete files at
+    # compaction. Re-enters this writer's own lease.
+    if tombstones.files(dim_dir):
         scd2_purge_keys(spark, dim_dir, None)
     if not _has_closed(dim_dir):
         return (0, 0)
@@ -800,8 +752,7 @@ def scd2_compact_closed(
     # silently drop a column pre-evolution files lack.
     cols = ["cbucket", "inc"]
     schema = _store_ddl(_extras(_meta(dim_dir))) + ", inc int, cbucket int"
-    token = uuid.uuid4().hex[:12]
-    stage = _p(dim_dir, f".staging-{token}/closed")
+    stage = os.path.join(journal.stage(dim_dir)[1], "closed")
     cluster_parquet_into(
         spark, root, stage, cols,
         target_bytes=target_bytes or TARGET_FILE_BYTES, schema=schema,
@@ -977,14 +928,11 @@ def scd2_migrate(
     if int(raw_meta.get("layout", 0)) >= _LAYOUT:
         _recover(dim_dir, sweep=True)
         return False
-    # legacy stores predate the journal: nothing to roll forward, and
-    # any .staging-* debris is from a crashed prior migration attempt
-    for name in os.listdir(dim_dir):
-        if name.startswith(".staging-"):
-            shutil.rmtree(os.path.join(dim_dir, name), ignore_errors=True)
+    # legacy stores predate the journal: nothing to roll forward, so
+    # this only sweeps staging debris of a crashed prior migration
+    journal.roll_forward(dim_dir, sweep=True)
 
-    token = uuid.uuid4().hex[:12]
-    stage = _p(dim_dir, f".staging-{token}")
+    stage = journal.stage(dim_dir)[1]
     cur = spark.read.parquet(_p(dim_dir, "current"))
     if "_written_inc" not in cur.columns:
         cur = cur.withColumn("_written_inc", F.lit(0).cast("int"))
@@ -1124,68 +1072,21 @@ def _closed_files_touching(closed_root: str, cbs: list[int]) -> list[str]:
 
 @guards_writer
 def scd2_queue_purge(spark: SparkSession, dim_dir: str, keys: DataFrame) -> int:
-    """Merge-on-read erasure queue (r10 verdict ask #2 — Iceberg's
-    position/equality-delete pattern on our store): record the erasure
-    obligation WITHOUT rewriting any data file. Appends ``(id,
-    asof_inc)`` tombstones — ``asof_inc`` is the store's watermark at
-    queue time, so the tombstone hides exactly the versions that
-    existed when the request arrived (``_minus_tombstones``); a later
-    re-insert of the key opens fresh visible history, identical to
-    physical-purge-then-reinsert. Readers fold tombstones in via a
-    count-gated broadcast anti-join; ``scd2_purge_keys`` and
-    ``scd2_compact_closed`` fold them PHYSICALLY and clear the queue —
-    so N small GDPR requests cost N tiny appends plus ONE batched
-    rewrite at the next maintenance pass, instead of N slice rewrites.
-
-    Commit is journaled like every append (staged files + moves), and
-    ``meta.n_tombstones`` (the broadcast-gate count) advances in the
-    same journal. Returns the number of keys queued."""
+    """Merge-on-read erasure (r10 verdict ask #2): queue the erasure of
+    every version of ``keys`` (an ``id`` column) that exists now,
+    WITHOUT rewriting any data file (queue format, sequence scoping and
+    the read-side fold: ``operators.tombstones``). A later re-insert
+    of a key opens fresh visible history, identical to
+    physical-purge-then-reinsert. ``scd2_purge_keys`` and
+    ``scd2_compact_closed`` fold the queue physically and clear it, so
+    N small GDPR requests cost N tiny appends plus ONE batched rewrite
+    at the next maintenance pass, instead of N slice rewrites. Returns
+    the number of keys queued."""
     _recover(dim_dir, sweep=True)
     meta = _meta(dim_dir)
-    kb = keys.select("id").distinct().localCheckpoint(eager=True)
-    n = kb.count()
-    if n == 0:
-        return 0
-    asof = int(meta.get("last_batch_id", -1))
-    token = uuid.uuid4().hex[:12]
-    stage = _p(dim_dir, f".staging-{token}")
-    kb.withColumn("asof_inc", F.lit(asof).cast("int")).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(stage, "tombstones"))
-    moves = _staged_moves(
-        os.path.join(stage, "tombstones"), _p(dim_dir, "tombstones"), token
-    )
-    new_meta = {**meta, "n_tombstones": int(meta.get("n_tombstones", 0)) + n}
-    _write_journal(dim_dir, {"moves": moves, "swaps": [], "meta": new_meta})
-    _roll_forward(dim_dir, sweep=True)
-    return n
-
-
-def _purge_spec(
-    spark: SparkSession, dim_dir: str, meta: dict, keys: DataFrame | None
-) -> DataFrame | None:
-    """The physical purge's combined erasure spec: explicit keys (every
-    version — ``asof_inc`` = +∞) ∪ the queued tombstone set (sequence-
-    scoped), collapsed to the max ``asof_inc`` per key. None if there
-    is nothing to purge."""
-    parts = []
-    if keys is not None:
-        parts.append(
-            keys.select("id").distinct().withColumn(
-                "asof_inc", F.lit(2**31 - 1).cast("int")
-            )
-        )
-    if int(meta.get("n_tombstones", 0)) > 0 and _has_tombstones(dim_dir):
-        parts.append(
-            spark.read.parquet(_p(dim_dir, "tombstones")).select("id", "asof_inc")
-        )
-    if not parts:
-        return None
-    spec = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
-    return (
-        spec.groupBy("id")
-        .agg(F.max("asof_inc").alias("asof_inc"))
-        .localCheckpoint(eager=True)
+    return tombstones.queue(
+        spark, dim_dir, keys.select("id"), meta,
+        scope=int(meta.get("last_batch_id", -1)),
     )
 
 
@@ -1218,13 +1119,9 @@ def scd2_purge_keys(
     files cover the full cbucket range and simply rewrite, exactly the
     pre-r11 behavior).
 
-    ``keys`` must have an ``id`` column (or be None to fold ONLY the
-    queued tombstones — the maintenance-pass form). The queued
-    tombstone set (``scd2_queue_purge``) is always folded in and
-    cleared in the same journaled commit: explicit keys erase every
-    version; queued tombstones erase sequence-scoped (versions written
-    at or before their queue point), so interleaved re-inserts
-    survive exactly as the merge-on-read reader showed them. The
+    ``keys`` must have an ``id`` column, or be None to fold ONLY the
+    erasure queue (the maintenance-pass form); the queue always folds
+    into the same journaled commit (``operators.tombstones``). The
     watermark is untouched — purging is not an increment; subsequent
     increments keep applying. Re-inserting a purged key later re-opens
     fresh history (the store never remembers the erasure — by
@@ -1232,53 +1129,25 @@ def scd2_purge_keys(
     _recover(dim_dir, sweep=True)
     meta = _meta(dim_dir)
     n_buckets = int(meta["n_buckets"])
-    spec = _purge_spec(spark, dim_dir, meta, keys)
-    if spec is None:
-        return
-    kb = spec
-    # one aggregation yields the touched-bucket set AND the broadcast
-    # gate's key count (the upsert's probe posture: a snapshot-sized
-    # erasure backlog must not force-broadcast every key)
-    stats = kb.groupBy(_bucket_of(n_buckets).alias("b")).count().collect()
-    tb = sorted(r["b"] for r in stats)
-    new_meta = {**meta, "n_tombstones": 0}
-    tomb_files = (
-        [
-            _p(dim_dir, f"tombstones/{n}")
-            for n in sorted(os.listdir(_p(dim_dir, "tombstones")))
-            if n.endswith(".parquet")
-        ]
-        if _has_tombstones(dim_dir)
+    kb, tomb = tombstones.purge_set(spark, dim_dir, "id", keys, scope=True)
+    # one aggregation yields the touched-bucket set AND the gate's key count
+    stats = (
+        kb.groupBy(_bucket_of(n_buckets).alias("b")).count().collect()
+        if kb is not None
         else []
     )
-    if not tb:
-        if tomb_files:  # queue held only never-seen keys: just clear it
-            _write_journal(
-                dim_dir,
-                {"moves": [], "swaps": [], "deletes": tomb_files,
-                 "meta": new_meta},
-            )
-            _roll_forward(dim_dir, sweep=True)
+    if not stats:
+        tombstones.clear(dim_dir, tomb, meta)
         return
+    tb = sorted(r["b"] for r in stats)
     n_keys = sum(r["count"] for r in stats)
-    gated = n_keys <= SCD2_BROADCAST_MAX_ROWS
-
-    def _minus_spec(df: DataFrame) -> DataFrame:
-        t = F.broadcast(kb) if gated else kb
-        return df.alias("h").join(
-            t.alias("t"),
-            (F.col("h.id") == F.col("t.id"))
-            & (F.col("h._written_inc") <= F.col("t.asof_inc")),
-            "left_anti",
-        )
-
-    token = uuid.uuid4().hex[:12]
-    stage = _p(dim_dir, f".staging-{token}")
+    spec = F.broadcast(kb) if n_keys <= tombstones.BROADCAST_MAX_ROWS else kb
+    token, stage = journal.stage(dim_dir)
 
     # current/: rewrite only the touched buckets, minus the spec
     def _w_current() -> None:
         cur = _read_current(spark, dim_dir, meta).filter(F.col("bucket").isin(tb))
-        kept = _minus_spec(cur).select(*_store_cols(_extras(meta)))
+        kept = _erase(cur, spec).select(*_store_cols(_extras(meta)))
         (
             kept.withColumn("bucket", _bucket_of(n_buckets))
             .repartition(len(tb), "bucket")
@@ -1304,7 +1173,7 @@ def scd2_purge_keys(
         closed = spark.read.schema(
             _store_ddl(_extras(meta)) + ", inc int, cbucket int"
         ).parquet(*touched_files)
-        kept_closed = _heal_cbucket(_minus_spec(closed))
+        kept_closed = _heal_cbucket(_erase(closed, spec))
         cols = ["cbucket", "inc"]
         (
             kept_closed.repartitionByRange(
@@ -1317,7 +1186,7 @@ def scd2_purge_keys(
             .parquet(os.path.join(stage, "closed"))
         )
         return (
-            _staged_moves(
+            journal.staged_moves(
                 os.path.join(stage, "closed"), _p(dim_dir, "closed"), token
             ),
             list(touched_files),
@@ -1327,14 +1196,16 @@ def scd2_purge_keys(
     # store slices against the checkpointed key set — run them
     # concurrently; the journal still commits only after both.
     _, (moves, deletes) = journal.run_parallel(_w_current, _w_closed)
-    swaps = _bucket_swaps(
-        spark, stage, dim_dir, tb, _store_ddl(_extras(meta))
+    swaps = journal.partition_swaps(
+        os.path.join(stage, "current"), _p(dim_dir, "current"),
+        [f"bucket={b}" for b in tb], _store_ddl(_extras(meta)),
     )
-    deletes += tomb_files  # fold: the queue is cleared in this commit
+    deletes += tomb  # fold: the queue is cleared in this commit
 
     _write_journal(
         dim_dir,
-        {"moves": moves, "swaps": swaps, "deletes": deletes, "meta": new_meta},
+        {"moves": moves, "swaps": swaps, "deletes": deletes,
+         "meta": {**meta, "n_tombstones": 0}},
     )
     _roll_forward(dim_dir, sweep=True)
 
@@ -1528,8 +1399,7 @@ def scd2_expire_closed(spark: SparkSession, dim_dir: str, cutoff) -> dict:
         # store's LARGEST slice (r12 review — callers wanting a
         # re-cluster already have scd2_compact_closed)
         return {"expired_versions": 0}
-    token = uuid.uuid4().hex[:12]
-    stage = _p(dim_dir, f".staging-{token}")
+    stage = journal.stage(dim_dir)[1]
     cols = ["cbucket", "inc"]  # explicit schema: always present (healed)
     (
         kept.repartitionByRange(

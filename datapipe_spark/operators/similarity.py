@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from datapipe_spark.operators import journal
+from datapipe_spark.operators import journal, tombstones
 from datapipe_spark.operators.lease import guards_writer
 from datapipe_spark.sources.tables import load_table
 
@@ -299,15 +299,8 @@ def build_ivf_index(
     # leftover tombstone queue would hide rebuilt vectors from every
     # probe, and a crashed bare swap's cells__old would be resurrected
     # over the new cells
-    base = index_dir.rstrip("/")
-    if os.path.isdir(base):
-        jp = os.path.join(base, _IVF_JOURNAL)
-        if os.path.exists(jp):
-            os.remove(jp)
-        for name in os.listdir(base):
-            if name.startswith(".staging-") or name == "tombstones":
-                shutil.rmtree(os.path.join(base, name), ignore_errors=True)
-        shutil.rmtree(base + "/cells__old", ignore_errors=True)
+    tombstones.reset(index_dir)
+    shutil.rmtree(index_dir.rstrip("/") + "/cells__old", ignore_errors=True)
 
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", _as_double("embedding").alias("v")
@@ -399,8 +392,6 @@ def compact_ivf_index(
     never touched: the frozen quantizer IS the index contract.
     Content-preserving atomic dir swap; returns (files_before,
     files_after)."""
-    import uuid
-
     from datapipe_spark.operators.maintenance import (
         TARGET_FILE_BYTES,
         compact_parquet_into,
@@ -412,17 +403,15 @@ def compact_ivf_index(
     base = index_dir.rstrip("/")
     cells = base + "/cells"
     recover_swap(cells)  # heal a pre-r12 crashed bare swap
-    # fold the merge-on-read erasure queue first (the posture shared
-    # by scd2_compact_closed and compact_minhash_index): post-
-    # compaction probes drop the anti-join entirely
-    if _ivf_has_tombstones(base):
+    # fold the erasure queue first (the scd2_compact_closed posture)
+    if tombstones.files(base):
         purge_ivf_index(spark, index_dir, None)
     before = parquet_file_count(cells)
     # stage + ONE journaled swap (r12 review: the previous bare
     # rename-pair swap left a crash window with cells/ missing that
     # only a racy reader-side recover_swap could heal; the store
     # already has journal machinery whose replay is recovery-locked)
-    stage = os.path.join(base, f".staging-{uuid.uuid4().hex[:12]}")
+    stage = journal.stage(base)[1]
     compact_parquet_into(
         spark, cells, os.path.join(stage, "cells"),
         target_bytes=target_bytes or TARGET_FILE_BYTES,
@@ -500,7 +489,11 @@ def topk_ivf_index(
     idx = spark.read.parquet(index_dir.rstrip("/") + "/cells").filter(
         F.col("qcell").isin(sorted({int(c) for row in order for c in row}))
     )
-    idx = _ivf_minus_tombstones(spark, index_dir.rstrip("/"), idx)
+    # queued erasures leave before scoring, so survivors fill the ranks
+    # exactly as after the physical purge
+    idx = tombstones.fold(
+        spark, index_dir, idx, F.col("d.vec_id") == F.col("t.vec_id")
+    )
     scored = (
         F.broadcast(probes)
         .join(idx, "qcell")
@@ -1549,78 +1542,19 @@ FROM q
 _IVF_JOURNAL = journal.JOURNAL
 _ivf_roll_forward = journal.roll_forward
 
-# broadcast gate for the purge backlog — the scd2/band-index posture:
-# a snapshot-sized erasure backlog falls back to shuffle joins
-IVF_PURGE_BROADCAST_MAX_ROWS = 2_000_000
-
-
-# broadcast gate for the tombstone fold at read: tombstone rows are a
-# single long column (~10 bytes/row on disk), so a BYTE gate gives the
-# reader its broadcast decision for free (no count job per probe) —
-# 32 MB ≈ the 2M-row gate the other stores use
-IVF_TOMBSTONE_BROADCAST_MAX_BYTES = 32 << 20
-
-
-def _ivf_has_tombstones(base: str) -> bool:
-    root = base + "/tombstones"
-    return os.path.isdir(root) and any(
-        n.endswith(".parquet") for n in os.listdir(root)
-    )
-
-
-def _ivf_minus_tombstones(spark: SparkSession, base: str, idx: DataFrame) -> DataFrame:
-    """Merge-on-read erasure on the probe's cells scan (r11 — the
-    ``scd2_queue_purge`` posture on the IVF index): queued vec_ids are
-    anti-joined out BEFORE scoring, so erased vectors appear in no
-    top-k and survivors fill the ranks exactly as they would after the
-    physical purge. Broadcast under a byte gate (tombstones are one
-    long column; bytes stand in for the row count with no extra job)."""
-    if not _ivf_has_tombstones(base):
-        return idx
-    from datapipe_spark.operators.maintenance import table_bytes
-
-    tomb = spark.read.parquet(base + "/tombstones").select("vec_id")
-    if table_bytes(base + "/tombstones") <= IVF_TOMBSTONE_BROADCAST_MAX_BYTES:
-        tomb = F.broadcast(tomb)
-    return idx.join(tomb, "vec_id", "left_anti")
-
 
 @guards_writer
 def queue_purge_ivf_index(
     spark: SparkSession, index_dir: str, purge_ids: DataFrame
 ) -> int:
     """Merge-on-read erasure queue for the IVF index (r11, completing
-    the r10 ask-#2 pattern across all three persisted stores): append
-    the vec_ids to ``tombstones/`` without rewriting any ``qcell=``
-    partition. Probes fold the queue at read; ``purge_ivf_index`` /
-    ``compact_ivf_index`` fold it physically and clear it. Journaled
-    (moves) like every other append in this repo. Returns the number
-    of ids queued."""
-    import json
-    import uuid
-
-    base = index_dir.rstrip("/")
-    _ivf_roll_forward(base, sweep=True)
-    kb = purge_ids.select("vec_id").distinct().localCheckpoint(eager=True)
-    n = kb.count()
-    if n == 0:
-        return 0
-    token = uuid.uuid4().hex[:12]
-    stage = os.path.join(base, f".staging-{token}")
-    kb.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(stage, "tombstones")
-    )
-    moves = []
-    sdir = os.path.join(stage, "tombstones")
-    for name in sorted(os.listdir(sdir)):
-        if name.startswith("part-") and name.endswith(".parquet"):
-            moves.append(
-                [os.path.join(sdir, name),
-                 os.path.join(base, f"tombstones/{token}-{name}")]
-            )
-    journal.write(base, {"moves": moves, "swaps": []})
-    _ivf_roll_forward(base, sweep=True)
-    return n
+    the r10 ask-#2 pattern across all three persisted stores; format and
+    fold in ``operators.tombstones``): queue the vec_ids without
+    rewriting any ``qcell=`` partition. ``purge_ivf_index`` /
+    ``compact_ivf_index`` fold the queue physically and clear it.
+    Returns the number of ids queued."""
+    _ivf_roll_forward(index_dir, sweep=True)
+    return tombstones.queue(spark, index_dir, purge_ids.select("vec_id"))
 
 
 @guards_writer
@@ -1645,47 +1579,25 @@ def purge_ivf_index(
     the index once per purge batch — at extreme scale a deployment
     would keep the ``vec_id → qcell`` mapping in its catalog (it is
     16 bytes/vector and append-only under the frozen quantizer) and
-    skip the scan entirely. The backlog id set is broadcast behind a count gate
-    (``IVF_PURGE_BROADCAST_MAX_ROWS``, shuffle fallback) so a
-    snapshot-sized backlog cannot OOM the driver.
+    skip the scan entirely. The backlog id set is broadcast behind a
+    count gate (``tombstones.BROADCAST_MAX_ROWS``, shuffle fallback) so
+    a snapshot-sized backlog is never force-broadcast.
 
     Returns ``{"purged_vecs", "touched_cells"}``.
     """
-    import json
-    import os
-    import uuid
-
     from datapipe_spark.operators.maintenance import recover_swap
 
     base = index_dir.rstrip("/")
     cells = base + "/cells"
     _ivf_roll_forward(base, sweep=True)
     recover_swap(cells)  # heal a crashed compaction swap first
-    # fold the merge-on-read queue (r11): queued tombstones join the
-    # explicit backlog and are cleared in this same journaled commit
-    # (purge_ids=None is the maintenance-pass form)
-    parts = []
-    if purge_ids is not None:
-        parts.append(purge_ids.select("vec_id"))
-    tomb_files = (
-        [
-            os.path.join(base, "tombstones", n)
-            for n in sorted(os.listdir(os.path.join(base, "tombstones")))
-            if n.endswith(".parquet")
-        ]
-        if _ivf_has_tombstones(base)
-        else []
-    )
-    if tomb_files:
-        parts.append(spark.read.parquet(base + "/tombstones").select("vec_id"))
-    if not parts:
+    # the queue folds into this commit (purge_ids=None is the
+    # maintenance-pass form)
+    kb, tomb = tombstones.purge_set(spark, base, "vec_id", purge_ids)
+    n_purge = kb.count() if kb is not None else 0
+    if not n_purge:
         return {"purged_vecs": 0, "touched_cells": 0}
-    spec = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
-    kb = spec.distinct().localCheckpoint(eager=True)
-    n_purge = kb.count()
-    if n_purge == 0:
-        return {"purged_vecs": 0, "touched_cells": 0}
-    probe = F.broadcast(kb) if n_purge <= IVF_PURGE_BROADCAST_MAX_ROWS else kb
+    probe = F.broadcast(kb) if n_purge <= tombstones.BROADCAST_MAX_ROWS else kb
 
     cdf = spark.read.parquet(cells)
     hits = (
@@ -1697,14 +1609,11 @@ def purge_ivf_index(
     )
     touched = sorted(int(r["qcell"]) for r in hits)
     n_found = int(sum(r["count"] for r in hits))
-    if not touched:
-        if tomb_files:  # queue held only never-seen ids: just clear it
-            journal.write(base, {"swaps": [], "deletes": tomb_files})
-            _ivf_roll_forward(base, sweep=True)
+    if not touched:  # the queue held only never-seen ids
+        tombstones.clear(base, tomb)
         return {"purged_vecs": 0, "touched_cells": 0}
 
-    token = uuid.uuid4().hex[:12]
-    stage = os.path.join(base, f".staging-{token}")
+    stage = journal.stage(base)[1]
     kept = _ivf_purge_kept_plan(spark, cells, touched, probe)
     (
         kept.repartition(len(touched), "qcell")
@@ -1712,16 +1621,11 @@ def purge_ivf_index(
         .partitionBy("qcell")
         .parquet(os.path.join(stage, "cells"))
     )
-    swaps = []
-    empty = None
-    for c in touched:
-        src = os.path.join(stage, f"cells/qcell={c}")
-        if not os.path.isdir(src):  # cell emptied entirely by the purge
-            if empty is None:
-                empty = spark.createDataFrame([], "vec_id long, v array<double>")
-            empty.write.mode("overwrite").parquet(src)
-        swaps.append([src, f"{cells}/qcell={c}"])
-    journal.write(base, {"swaps": swaps, "deletes": tomb_files})
+    swaps = journal.partition_swaps(
+        os.path.join(stage, "cells"), cells, [f"qcell={c}" for c in touched],
+        "vec_id long, v array<double>",
+    )
+    journal.write(base, {"swaps": swaps, "deletes": tomb})
     _ivf_roll_forward(base, sweep=True)
     return {"purged_vecs": n_found, "touched_cells": len(touched)}
 

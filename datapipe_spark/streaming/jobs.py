@@ -44,9 +44,8 @@ GAP_MINUTES = 30
 # production cluster would size this to the state volume. r5 A/B on
 # the 32-core box, all 8 streaming queries back-to-back (sf0.1):
 # 4→35.3s, 8→30.0s, 16→36.5s, 32→41.1s — 8 confirmed the plateau
-# (fewer starves replay parallelism, more multiplies state stores);
-# env override for re-measurement.
-STREAM_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "8"))
+# (fewer starves replay parallelism, more multiplies state stores).
+STREAM_SHUFFLE_PARTITIONS = 8
 
 # State store provider for every stateful query (r12 verdict ask #1).
 # The default HDFS-backed provider keeps ALL state on the executor
@@ -56,30 +55,14 @@ STREAM_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "8"
 # bundles RocksDBStateStoreProvider (rocksdbjni ships in the distro,
 # no extra jar): state lives off-heap/on-disk per executor with
 # snapshot+changelog checkpointing to the checkpoint dir, so state
-# size is bounded by local disk, not heap. Measured on this box
-# (scripts/stress_r13.py, 2M distinct keys): RocksDB holds the full
-# suite green with a flat driver-heap profile where the heap provider
-# grows linearly in key count — see SCALING.md round 13.
-# Checkpoint compatibility: Spark pins the provider class into each
-# checkpoint's offset-log conf at first start, so an existing
-# checkpoint keeps its original provider and a provider flip only
-# applies to FRESH checkpoints — every registry streaming entry
-# builds its checkpoint fresh per run (fresh_dir), so the flip is
-# safe here; a production migration would replay from source or use
-# the state rebalancing tooling. Env override: SPARK_GRAFT_STATE_STORE
-# ∈ {rocksdb (default), hdfs}.
-_STATE_STORE_PROVIDERS = {
-    "rocksdb": (
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider"
-    ),
-    "hdfs": (
-        "org.apache.spark.sql.execution.streaming.state."
-        "HDFSBackedStateStoreProvider"
-    ),
-}
-STATE_STORE = os.environ.get("SPARK_GRAFT_STATE_STORE", "rocksdb").lower()
-
+# size is bounded by local disk, not heap. Measured with 2M distinct
+# keys (scripts/stress_r13.py, retired; see git history at eaa1b36):
+# RocksDB holds the full suite green with a flat JVM heap profile where
+# the heap provider grows linearly in key count — see SCALING.md round
+# 13.
+ROCKSDB_PROVIDER = (
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+)
 _PROVIDER_CONF = "spark.sql.streaming.stateStore.providerClass"
 
 # Changelog checkpointing for the RocksDB provider (guide §1/§2:
@@ -92,13 +75,10 @@ _PROVIDER_CONF = "spark.sql.streaming.stateStore.providerClass"
 # With it the commit uploads only the batch's changelog — O(delta) —
 # and full snapshots move to background maintenance, which is also the
 # only posture that scales to 100 TB state (snapshot cost off the
-# latency path). Spark pins the setting into each checkpoint at first
-# start; all registry checkpoints are fresh per run, so the flip is
-# safe here. Env override: SPARK_GRAFT_ROCKSDB_CHANGELOG ∈ {1, 0}.
+# latency path).
 _CHANGELOG_CONF = (
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
 )
-ROCKSDB_CHANGELOG = os.environ.get("SPARK_GRAFT_ROCKSDB_CHANGELOG", "1") != "0"
 
 
 @contextmanager
@@ -111,9 +91,8 @@ def _stream_shuffle(spark: SparkSession):
     prev_provider = spark.conf.get(_PROVIDER_CONF, None)
     prev_chlog = spark.conf.get(_CHANGELOG_CONF, None)
     spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_SHUFFLE_PARTITIONS))
-    spark.conf.set(_PROVIDER_CONF, _STATE_STORE_PROVIDERS[STATE_STORE])
-    if STATE_STORE == "rocksdb" and ROCKSDB_CHANGELOG:
-        spark.conf.set(_CHANGELOG_CONF, "true")
+    spark.conf.set(_PROVIDER_CONF, ROCKSDB_PROVIDER)
+    spark.conf.set(_CHANGELOG_CONF, "true")
     try:
         yield
     finally:

@@ -642,12 +642,63 @@ def _ivf_sweep_case(spark, sf_dir):
     return setup, op, state
 
 
+def _scd2_fold_sweep_case(spark, sf_dir):
+    """SCD2 fold of a queued erasure: the upsert case's store with keys
+    1 (open and closed versions) and 4 queued, folded by the
+    maintenance-pass purge; the state adds the queue's backlog."""
+    from datapipe_spark.operators import scd2, tombstones
+
+    setup0, upsert, state0 = _scd2_sweep_case(spark, sf_dir)
+
+    def setup(d):
+        setup0(d)
+        upsert(d)
+        scd2.scd2_queue_purge(spark, d, spark.createDataFrame([(1,), (4,)], "id long"))
+
+    def op(d):
+        scd2.scd2_purge_keys(spark, d, None)
+
+    def state(d):
+        return state0(d), scd2._meta(d).get("n_tombstones"), len(tombstones.files(d))
+
+    return setup, op, state
+
+
+def _minhash_fold_sweep_case(spark, sf_dir):
+    """Band-index fold of a queued erasure: the append case's index
+    with a group rep (1, promoting its verbatim copy 11), a whole group
+    (12, a probe match) and a never-indexed id queued, folded by the
+    maintenance-pass purge; the state adds the queue's backlog."""
+    from datapipe_spark.operators import dedup_index as di
+    from datapipe_spark.operators import tombstones
+
+    setup0, append, state0 = _minhash_sweep_case(spark, sf_dir)
+
+    def setup(d):
+        setup0(d)
+        append(d)
+        di.queue_purge_minhash_index(
+            spark, d, spark.createDataFrame([(1,), (12,), (99,)], "doc_id long")
+        )
+
+    def op(d):
+        di.purge_minhash_index(spark, d, None)
+
+    def state(d):
+        backlog = di._meta(spark, d).get("n_tombstones")
+        return state0(d), backlog, len(tombstones.files(d))
+
+    return setup, op, state
+
+
 @pytest.mark.parametrize(
     "case",
     [
         pytest.param(_scd2_sweep_case, id="scd2_upsert"),
         pytest.param(_minhash_sweep_case, id="append_minhash_index"),
         pytest.param(_ivf_sweep_case, id="purge_ivf_index"),
+        pytest.param(_scd2_fold_sweep_case, id="fold_scd2_tombstones"),
+        pytest.param(_minhash_fold_sweep_case, id="fold_minhash_tombstones"),
     ],
 )
 def test_journaled_commit_crash_sweep_every_fs_step(
@@ -1327,7 +1378,7 @@ def test_scd2_queued_purges_equal_immediate_purges(spark, tmp_path):
     import datetime as dt
     import os as _os
 
-    from datapipe_spark.operators import scd2
+    from datapipe_spark.operators import scd2, tombstones
 
     schema = (
         "id long, user_id long, status string, total_amount string, "
@@ -1390,7 +1441,7 @@ def test_scd2_queued_purges_equal_immediate_purges(spark, tmp_path):
     scd2.scd2_compact_closed(spark, pd_)
     assert hist(qd) == hist(pd_)
     assert scd2._meta(qd).get("n_tombstones", 0) == 0
-    assert not scd2._has_tombstones(qd)
+    assert not tombstones.files(qd)
     # post-fold, the physical bytes hold no trace of the purged keys
     purged_in_files = (
         spark.read.parquet(scd2._p(qd, "closed"))
@@ -2071,9 +2122,9 @@ def test_scd2_purge_above_broadcast_gate_still_exact(spark, tmp_path, monkeypatc
     """A purge backlog past the broadcast gate must fall back to a
     shuffle anti-join (no forced driver broadcast) and still erase
     exactly the requested keys."""
-    from datapipe_spark.operators import scd2
+    from datapipe_spark.operators import scd2, tombstones
 
-    monkeypatch.setattr(scd2, "SCD2_BROADCAST_MAX_ROWS", 0)
+    monkeypatch.setattr(tombstones, "BROADCAST_MAX_ROWS", 0)
     d = str(tmp_path / "purge_big")
     _mini_store(spark, scd2, d)
     before = {tuple(r) for r in scd2.scd2_read_history(spark, d).collect()}

@@ -2540,6 +2540,7 @@ def test_append_preserves_tombstone_queue(spark, tmp_path):
     purge/compaction never fold the queue (the erasure obligation
     silently lost)."""
     from datapipe_spark.operators import dedup_index as di
+    from datapipe_spark.operators import tombstones
 
     idx = str(tmp_path / "appq")
     corpus = _purge_corpus(spark)
@@ -2569,7 +2570,7 @@ def test_append_preserves_tombstone_queue(spark, tmp_path):
     # ...and compaction still folds the queue physically
     di.compact_minhash_index(spark, idx)
     assert di._meta(spark, idx).get("n_tombstones", 0) == 0
-    assert not di._has_tombstones(idx)
+    assert not tombstones.files(idx)
     mem_ids = {
         r["doc_id"] for r in spark.read.parquet(f"{idx}/mem").collect()
     }
@@ -2584,6 +2585,7 @@ def test_build_in_place_clears_stale_store_state(spark, tmp_path):
     import json as _json
 
     from datapipe_spark.operators import dedup_index as di
+    from datapipe_spark.operators import tombstones
 
     idx = str(tmp_path / "rebuild")
     corpus = _purge_corpus(spark)
@@ -2609,7 +2611,7 @@ def test_build_in_place_clears_stale_store_state(spark, tmp_path):
     di.build_minhash_index(spark, corpus, idx)
     assert not _os.path.exists(di._p(idx, di._JOURNAL))
     assert not [n for n in _os.listdir(idx) if n.startswith(".staging-")]
-    assert not di._has_tombstones(idx)
+    assert not tombstones.files(idx)
     meta = di._meta(spark, idx)
     assert meta.get("last_batch_id") is None and meta.get("n_tombstones", 0) == 0
     # the fresh index accepts batch 0 (the stale watermark is gone)
@@ -2634,6 +2636,7 @@ def test_purge_minhash_never_seen_queue_clears_without_rewrite(
     import os as _os
 
     from datapipe_spark.operators import dedup_index as di
+    from datapipe_spark.operators import tombstones
 
     idx = str(tmp_path / "noop_fold")
     di.build_minhash_index(spark, _purge_corpus(spark), idx)
@@ -2655,7 +2658,7 @@ def test_purge_minhash_never_seen_queue_clears_without_rewrite(
     assert stats == {"purged_docs": 0, "dropped_reps": 0, "renamed_reps": 0}
     assert inodes() == before, "a no-op fold must not rewrite any part"
     assert di._meta(spark, idx).get("n_tombstones", 0) == 0
-    assert not di._has_tombstones(idx)
+    assert not tombstones.files(idx)
 
 
 def test_queue_purge_minhash_equals_physical_purge(spark, tmp_path):
@@ -2665,6 +2668,7 @@ def test_queue_purge_minhash_equals_physical_purge(spark, tmp_path):
     folds the queue — afterwards the index equals the physically
     purged one part-for-part and the tombstone set is gone."""
     from datapipe_spark.operators import dedup_index as di
+    from datapipe_spark.operators import tombstones
 
     idx_q, idx_p = str(tmp_path / "mor"), str(tmp_path / "phys")
     corpus = _purge_corpus(spark)
@@ -2694,7 +2698,7 @@ def test_queue_purge_minhash_equals_physical_purge(spark, tmp_path):
     # compaction folds the queue physically: parts equal, queue gone
     di.compact_minhash_index(spark, idx_q)
     assert di._meta(spark, idx_q).get("n_tombstones", 0) == 0
-    assert not di._has_tombstones(idx_q)
+    assert not tombstones.files(idx_q)
     mq, mp = di._meta(spark, idx_q), di._meta(spark, idx_p)
     assert (mq["n_docs"], mq["n_reps"]) == (mp["n_docs"], mp["n_reps"])
     for part in ("mem", "sigs", "bands"):
@@ -2710,8 +2714,9 @@ def test_purge_minhash_index_above_broadcast_gate_still_exact(
     """A purge backlog past the broadcast gate must fall back to
     shuffle joins and still produce the exact rebuilt index."""
     from datapipe_spark.operators import dedup_index as di
+    from datapipe_spark.operators import tombstones
 
-    monkeypatch.setattr(di, "PURGE_BROADCAST_MAX_ROWS", 0)
+    monkeypatch.setattr(tombstones, "BROADCAST_MAX_ROWS", 0)
     idx, ref = str(tmp_path / "gated"), str(tmp_path / "gref")
     corpus = _purge_corpus(spark)
     di.build_minhash_index(spark, corpus, idx)
@@ -2865,6 +2870,7 @@ def test_queue_purge_ivf_equals_physical_purge(spark, sf_dir, tmp_path):
     the ranks — and compaction folds the queue: afterwards the cells
     tables are row-identical and the tombstone set is gone."""
     from datapipe_spark.operators import similarity as sim
+    from datapipe_spark.operators import tombstones
     from datapipe_spark.sources.tables import load_table
 
     idx_q, idx_p = str(tmp_path / "mor"), str(tmp_path / "phys")
@@ -2890,7 +2896,7 @@ def test_queue_purge_ivf_equals_physical_purge(spark, sf_dir, tmp_path):
 
     # compaction folds the queue physically and clears it
     sim.compact_ivf_index(spark, idx_q)
-    assert not sim._ivf_has_tombstones(idx_q)
+    assert not tombstones.files(idx_q)
     cq = sorted(map(repr, spark.read.parquet(f"{idx_q}/cells").collect()))
     cp = sorted(map(repr, spark.read.parquet(f"{idx_p}/cells").collect()))
     assert cq == cp

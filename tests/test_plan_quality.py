@@ -623,6 +623,50 @@ def test_scd2_tombstone_fold_broadcasts_under_gate(spark, tmp_path):
     )
 
 
+def test_minhash_tombstone_fold_broadcasts_under_gate(spark, tmp_path):
+    """The band-index twin of the scd2 and IVF fold pins: a probe over
+    a queued index folds the queue with ONE map-side broadcast
+    anti-join — never a shuffle — and the anti-join vanishes from the
+    plan once a physical purge folds the queue."""
+    from datapipe_spark.operators import dedup_index as di
+
+    idx, src = str(tmp_path / "mor_plan_idx"), str(tmp_path / "docs")
+    # read back from parquet: file stats let the batch-side joins size-
+    # broadcast, so any SortMergeJoin left would be the fold's own
+    spark.createDataFrame(
+        [
+            (i, f"document number {i} with plenty of distinct shingle "
+                f"words alpha beta gamma {i * 3} delta epsilon")
+            for i in range(6)
+        ],
+        "doc_id long, text string",
+    ).write.parquet(src)
+    docs = spark.read.parquet(src)
+    di.build_minhash_index(spark, docs, idx)
+    di.queue_purge_minhash_index(
+        spark, idx, spark.createDataFrame([(2,)], "doc_id long")
+    )
+    batch = docs.filter("doc_id = 1").selectExpr("doc_id + 100 AS doc_id", "text")
+
+    def probe_plan():
+        out, bmem, bsigs = di._probe_plan(spark, idx, batch)
+        plan = _plan(spark, out)
+        bmem.unpersist()
+        bsigs.unpersist()
+        return plan
+
+    plan = probe_plan()
+    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan, plan
+    assert "SortMergeJoin" not in plan and "Cartesian" not in plan, plan
+
+    di.purge_minhash_index(spark, idx, None)  # fold
+    plan2 = probe_plan()
+    assert "LeftAnti" not in plan2, (
+        "an empty queue must cost the probe nothing",
+        plan2,
+    )
+
+
 def test_purge_minhash_index_plans_broadcast_under_gate(spark, tmp_path):
     """The band-index purge's part rewrites must be map-only passes
     under the count gate: every join against a full part (mem, sigs,
@@ -703,12 +747,13 @@ def test_purge_ivf_index_plan_prunes_to_touched_cells(spark, tmp_path):
 
 def test_ivf_tombstone_fold_broadcasts_and_vanishes_when_empty(spark, tmp_path):
     """The IVF merge-on-read fold (r11): a probe scan against a queued
-    index folds tombstones with a broadcast anti-join under the byte
+    index folds tombstones with a broadcast anti-join under the row
     gate — never a shuffle of the cells table — and the anti-join
     vanishes from the plan once the queue is folded/cleared."""
     from pyspark.sql import functions as F
 
     from datapipe_spark.operators import similarity as sim
+    from datapipe_spark.operators import tombstones
 
     base = str(tmp_path / "ivf_mor")
     vecs = spark.range(100).select(
@@ -724,7 +769,7 @@ def test_ivf_tombstone_fold_broadcasts_and_vanishes_when_empty(spark, tmp_path):
     )
     idx = spark.read.parquet(base + "/cells").filter(F.col("qcell").isin([7]))
     plan = (
-        sim._ivf_minus_tombstones(spark, base, idx)
+        tombstones.fold(spark, base, idx, F.col("d.vec_id") == F.col("t.vec_id"))
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -733,11 +778,45 @@ def test_ivf_tombstone_fold_broadcasts_and_vanishes_when_empty(spark, tmp_path):
     assert "SortMergeJoin" not in plan and "Cartesian" not in plan, plan
 
     sim.purge_ivf_index(spark, base, None)  # fold clears the queue
-    assert not sim._ivf_has_tombstones(base)
+    assert not tombstones.files(base)
     plan2 = (
-        sim._ivf_minus_tombstones(spark, base, idx)
+        tombstones.fold(spark, base, idx, F.col("d.vec_id") == F.col("t.vec_id"))
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
     )
     assert "LeftAnti" not in plan2, plan2
+
+
+def test_tombstone_fold_gate_counts_queued_rows(spark, tmp_path, monkeypatch):
+    """The read fold's broadcast gate is the queue's row count summed
+    over every queued file's footer: at the gate the queue broadcasts,
+    one row past it the fold falls back to a shuffle anti-join (auto-
+    broadcast off, so a BroadcastHashJoin could only be the gate's
+    hint), with the same rows either way."""
+    from datapipe_spark.operators import tombstones
+
+    d = str(tmp_path / "store")
+    for ids in ([(1,), (2,)], [(3,), (4,)]):  # two queue files, 4 rows
+        tombstones.queue(spark, d, spark.createDataFrame(ids, "vec_id long"))
+    assert len(tombstones.files(d)) == 2
+    df = spark.range(10).withColumnRenamed("id", "vec_id")
+    on = F.col("d.vec_id") == F.col("t.vec_id")
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        monkeypatch.setattr(tombstones, "BROADCAST_MAX_ROWS", 4)
+        at_gate = tombstones.fold(spark, d, df, on)
+        plan = _plan(spark, at_gate)
+        assert "BroadcastHashJoin" in plan and "LeftAnti" in plan, plan
+        assert "SortMergeJoin" not in plan, plan
+        monkeypatch.setattr(tombstones, "BROADCAST_MAX_ROWS", 3)
+        past_gate = tombstones.fold(spark, d, df, on)
+        plan2 = _plan(spark, past_gate)
+        assert "BroadcastHashJoin" not in plan2, plan2
+        assert "SortMergeJoin" in plan2 and "LeftAnti" in plan2, plan2
+        want = [0, 5, 6, 7, 8, 9]
+        for out in (at_gate, past_gate):
+            assert sorted(r[0] for r in out.collect()) == want
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)

@@ -36,7 +36,6 @@ def test_stateful_queries_run_on_rocksdb_state_store(spark, sf_dir):
 
     from datapipe_spark.util import scratch_root
 
-    assert jobs.STATE_STORE == "rocksdb"  # default, not an env accident
     jobs.streaming_dedup_events(spark, sf_dir)  # dropDuplicates state
     ckpt = os.path.join(scratch_root(), "dedup", "cp")
     offsets = sorted(glob.glob(os.path.join(ckpt, "offsets", "*")))
@@ -46,7 +45,7 @@ def test_stateful_queries_run_on_rocksdb_state_store(spark, sf_dir):
     meta = next(json.loads(ln) for ln in lines if '"conf"' in ln)
     assert (
         meta["conf"]["spark.sql.streaming.stateStore.providerClass"]
-        == jobs._STATE_STORE_PROVIDERS["rocksdb"]
+        == jobs.ROCKSDB_PROVIDER
     )
     state_files = glob.glob(
         os.path.join(ckpt, "state", "**", "*"), recursive=True
